@@ -95,15 +95,20 @@ from delta_lake_experiment_spark.plans.protocol import (
 )
 from delta_lake_experiment_spark.plans.snapshot import (
     CHECKPOINT_INTERVAL,
-    CHECKPOINT_PREFIX,
-    LOG_PREFIX,
+    LogRecord,
     Snapshot,
     _stats_intersect,
     checkpoint_name,
-    log_name,
+    checkpoint_versions,
+    iter_records,
+    log_versions,
     newest_checkpoint_version,
+    read_record,
+    reclaim_log,
     replay_log,
+    ts_bisect,
     write_last_checkpoint,
+    write_record,
 )
 from delta_lake_experiment_spark.storage.objectstore import LocalObjectStorage, ObjectStorage
 
@@ -324,29 +329,11 @@ class DeltaLakeClient:
             # on retry) — recorded stamps never regress
             floor_ts = tx.snapshot.last_ts
             while True:
-                payload: dict[str, Any] = {
-                    "id": attempt_id,
-                    # conflict-format version: >=2 means this commit's
-                    # add actions carry rewrite provenance ("rw"), so
-                    # reconciliation may trust an untagged add to be a
-                    # FRESH insert. Records without it predate the tag
-                    # and fall back to the commit-granular exemption.
-                    "cv": 2,
-                    # in-commit wall-clock (epoch micros): powers
-                    # TIMESTAMP AS OF resolution and DESCRIBE HISTORY.
-                    # Monotonic by construction (Delta's ICT:
-                    # max(now, prev + 1)) so a skewed writer's clock
-                    # never makes the ascending timestamp walks stop
-                    # early; ordering authority stays with the version.
-                    "ts": max(int(self._clock() * 1_000_000), floor_ts + 1),
-                    "actions": [a.to_json() for a in tx.actions],
-                }
-                if txn is not None:
-                    # idempotence marker for exactly-once streaming sinks
-                    payload["txn"] = {"app_id": txn[0], "batch": int(txn[1])}
-                record = json.dumps(payload).encode()
                 try:
-                    self.store.put_if_absent(log_name(attempt_id), record)
+                    write_record(
+                        self.store, attempt_id, tx.actions, self._clock(),
+                        floor_ts, txn,
+                    )
                     break
                 except ObjectExistsError:
                     if retry_independent <= 0:
@@ -370,13 +357,7 @@ class DeltaLakeClient:
                     restamp: set[str] = set()
                     # anchored at the collided version: O(interleaved
                     # commits) listed keys, not the whole log prefix
-                    for name in self.store.list_prefix_ordered(
-                        LOG_PREFIX, start_after=log_name(attempt_id - 1)
-                    ):
-                        version = int(name[len(LOG_PREFIX):])
-                        if version < attempt_id:
-                            continue
-                        interleaved = json.loads(self.store.read(name))
+                    for interleaved in iter_records(self.store, attempt_id - 1):
                         restamp |= self._reconcile_interleaved(
                             tx, interleaved, my_tables, txn
                         )
@@ -395,7 +376,7 @@ class DeltaLakeClient:
     def _reconcile_interleaved(
         self,
         tx: "_Tx",
-        interleaved: dict[str, Any],
+        interleaved: LogRecord,
         my_tables: set[str],
         txn: Optional[tuple[str, int]],
     ) -> set[str]:
@@ -404,31 +385,28 @@ class DeltaLakeClient:
         Raises :class:`ConcurrentCommitError` on a genuine conflict;
         otherwise returns the tables SHARED with the interleaved commit
         (those need their fresh row stamps re-keyed — see commit_tx)."""
-        theirs: dict[str, list[tuple[str, dict[str, Any]]]] = {}
-        for act in interleaved["actions"]:
-            kind = next(iter(act))
-            body = act[kind]
-            if kind == "protocol":
+        theirs: dict[str, list[Action]] = {}
+        for act in interleaved.actions:
+            if isinstance(act, Protocol):
                 # protocol folds are a monotone set UNION — order-
                 # independent, so an interleaved upgrade never
                 # conflicts at file/metadata granularity. Whether THIS
                 # client still satisfies the upgraded writer set is
                 # re-gated by commit_tx's retry fold.
                 continue
-            t = body["table"]
-            if t in my_tables:
-                theirs.setdefault(t, []).append((kind, body))
+            if act.table in my_tables:
+                theirs.setdefault(act.table, []).append(act)
         if not theirs:
             return set()
         # a concurrently committed copy of the SAME streaming batch
         # must conflict, never admit — admitting an append-append here
         # would double-apply the batch the txn marker exists to dedupe
-        itxn = interleaved.get("txn")
+        itxn = interleaved.txn
         if (
             txn is not None
             and itxn is not None
-            and itxn.get("app_id") == txn[0]
-            and int(itxn.get("batch", -1)) >= int(txn[1])
+            and itxn[0] == txn[0]
+            and itxn[1] >= int(txn[1])
         ):
             raise ConcurrentCommitError(
                 f"tx {tx.id}: streaming batch {txn} was committed by a"
@@ -437,12 +415,7 @@ class DeltaLakeClient:
         # a DROP counts as real metadata on both sides: any same-table
         # interleave against a drop is a genuine conflict (the loser's
         # retry re-reads and finds the table gone or freshly recreated)
-        my_real_meta = {
-            a.table
-            for a in tx.actions
-            if (isinstance(a, ChangeMetadata) and not a.ident_only)
-            or isinstance(a, DropTable)
-        }
+        my_real_meta = {a.table for a in tx.actions if _is_real_meta(a)}
         my_io_meta = {
             a.table
             for a in tx.actions
@@ -466,11 +439,10 @@ class DeltaLakeClient:
             #    wholesale replace loses nothing because the other
             #    side moved no metadata, and the files reconcile below
             #    at file granularity like any append interleave.
-            their_any_meta = any(k in ("metadata", "drop") for k, _ in acts)
-            their_real_meta = any(
-                k == "drop" or (k == "metadata" and not b.get("io"))
-                for k, b in acts
+            their_any_meta = any(
+                isinstance(a, (ChangeMetadata, DropTable)) for a in acts
             )
+            their_real_meta = any(_is_real_meta(a) for a in acts)
             if (
                 t in my_real_meta
                 or their_real_meta
@@ -479,18 +451,10 @@ class DeltaLakeClient:
                 raise ConcurrentCommitError(
                     f"tx {tx.id}: concurrent metadata change on {t!r}"
                 )
-            their_targets = {b["name"] for k, b in acts if k == "remove"}
-            for k, b in acts:
-                if k == "dv":
-                    their_targets.update(b["objects"])
-            my_targets = {
-                a.name
-                for a in tx.actions
-                if isinstance(a, RemoveDataObject) and a.table == t
-            }
-            for a in tx.actions:
-                if isinstance(a, AddDeletionVector) and a.table == t:
-                    my_targets.update(a.objects)
+            their_targets = _rewrite_targets(acts)
+            my_targets = _rewrite_targets(
+                a for a in tx.actions if getattr(a, "table", None) == t
+            )
             if their_targets & my_targets:
                 raise ConcurrentCommitError(
                     f"tx {tx.id}: concurrent commit rewrote/masked"
@@ -521,12 +485,12 @@ class DeltaLakeClient:
             # reordering. Legacy records (no "cv") predate provenance:
             # their adds count as rewrites when the commit also removed
             # on t (the old commit-granular exemption), fresh otherwise.
-            legacy = "cv" not in interleaved
+            legacy = not interleaved.cv
             fresh_adds = [
-                b
-                for k, b in acts
-                if k == "add"
-                and not b.get("rw")
+                a
+                for a in acts
+                if isinstance(a, AddDataObject)
+                and not a.rewrite
                 and not (legacy and their_targets)
             ]
             if fresh_adds and (
@@ -1129,34 +1093,20 @@ actions.DropTable` for why clearing the live set on fold is
         at both boundary states."""
         drops: list[dict] = []
         versions: set[int] = set()
-        for name in reversed(self.store.list_prefix_ordered(LOG_PREFIX)):
-            try:
-                record = json.loads(self.store.read(name))
-            except Exception:
-                # tolerate ONLY records that are actually GONE (raced
-                # vacuum_log mid-walk). A record that exists but fails
-                # to read must re-raise: silently skipping a corrupt
-                # NEWEST drop record would make this walk find an OLDER
-                # drop of the same name and resurrect the wrong
-                # incarnation — a silent wrong-data restore where a
-                # loud store error was available (review catch)
-                if self.store.exists(name) is False:
-                    continue
-                raise
-            v = int(name[len(LOG_PREFIX):])
+        for v in reversed(log_versions(self.store)):
+            # a record GONE mid-walk (raced vacuum_log) is skipped; one
+            # that exists but fails to read re-raises (read_record)
+            record = read_record(self.store, v)
+            if record is None:
+                continue
             versions.add(v)
             hit = False
-            for a in record.get("actions", []):
-                d = a.get("drop")
-                if d:
+            for a in record.actions:
+                if isinstance(a, DropTable):
                     drops.append(
-                        {
-                            "table": d["table"],
-                            "version": v,
-                            "ts_us": record.get("ts"),
-                        }
+                        {"table": a.table, "version": v, "ts_us": record.ts}
                     )
-                    if d["table"] == stop_table:
+                    if a.table == stop_table:
                         hit = True
             if hit:
                 break
@@ -1164,7 +1114,7 @@ actions.DropTable` for why clearing the live set on fold is
 
     @staticmethod
     def _replayable_version(
-        v: int, record_versions: set[int], checkpoint_versions: list[int]
+        v: int, record_versions: set[int], checkpoints: list[int]
     ) -> bool:
         """Whether ``replay_log(as_of=v)`` can reconstruct state ``v``
         from the surviving metadata: an anchor (a checkpoint at
@@ -1178,7 +1128,7 @@ actions.DropTable` for why clearing the live set on fold is
             floor -= 1
         if floor == 1:
             return True  # full history survives: genesis anchors it
-        return any(floor - 1 <= c <= v for c in checkpoint_versions)
+        return any(floor - 1 <= c <= v for c in checkpoints)
 
     def list_dropped_tables(self, verify_bytes: bool = False) -> list[dict]:
         """Dropped-table discovery (Delta's SHOW DROPPED TABLES): one
@@ -1224,10 +1174,7 @@ actions.DropTable` for why clearing the live set on fold is
         RECOVERABLE candidate only, one pinned replay + O(files/page)
         LIST pages (exactly one undrop's probe bill)."""
         drops, record_versions = self._walk_drops()
-        checkpoints = [
-            int(n[len(CHECKPOINT_PREFIX):])
-            for n in self.store.list_prefix_ordered(CHECKPOINT_PREFIX)
-        ]
+        checkpoints = checkpoint_versions(self.store)
         current = replay_log(self.store)
         newest_seen: set[str] = set()
         out: list[dict] = []
@@ -1268,13 +1215,7 @@ actions.DropTable` for why clearing the live set on fold is
                 {
                     "table": t,
                     "version": v,
-                    "dropped_at": (
-                        datetime.datetime.fromtimestamp(
-                            ts_us / 1_000_000, tz=datetime.timezone.utc
-                        ).replace(tzinfo=None)
-                        if ts_us is not None
-                        else None
-                    ),
+                    "dropped_at": None if ts_us is None else _utc_naive(ts_us),
                     "recoverable": reason is None,
                     "reason": reason,
                 }
@@ -2926,26 +2867,12 @@ actions.DropTable` for why clearing the live set on fold is
         before timestamps were recorded count as epoch-0 (always
         eligible). Raises if the bound precedes every commit."""
         bound = self._ts_micros(ts)
-        names = list(self.store.list_prefix_ordered(LOG_PREFIX))
-        # binary search the newest record with ts <= bound: O(log n)
-        # record reads. Exact because in-commit timestamps are monotonic
-        # (commit stamps max(now, prev_ts + 1) — Delta's ICT), so the
-        # recorded clocks form a sorted sequence even under writer skew.
-        # Caveat (Delta documents the same for ICT enablement): records
-        # written BEFORE monotonic stamping may hold skewed clocks;
-        # resolution inside that legacy region is best-effort, while
-        # every post-upgrade commit stamps above the replayed maximum
-        # (Snapshot.last_ts), so bounds targeting new commits are exact.
-        i, j = 0, len(names)
-        while i < j:
-            mid = (i + j) // 2
-            record = json.loads(self.store.read(names[mid]))
-            if int(record.get("ts", 0)) <= bound:
-                i = mid + 1
-            else:
-                j = mid
+        versions = log_versions(self.store)
+        # the newest record with ts <= bound sits just below the first
+        # with ts > bound
+        i = ts_bisect(self.store, versions, lambda t: t > bound)
         if i > 0:
-            return int(names[i - 1][len(LOG_PREFIX):])
+            return versions[i - 1]
         raise TableNotFoundError(
             f"no commit at or before {ts!r} (earliest commit is newer)"
         )
@@ -2970,37 +2897,34 @@ actions.DropTable` for why clearing the live set on fold is
         like :meth:`vacuum`.
         """
         _OP = {
-            "add": "WRITE",
-            "remove": "DELETE",
-            "metadata": "ALTER",
-            "add_dv": "DELETE",
+            AddDataObject: "WRITE",
+            RemoveDataObject: "DELETE",
+            ChangeMetadata: "ALTER",
+            AddDeletionVector: "DV",
+            DropTable: "DROP",
+            Protocol: "PROTOCOL",
         }
         rows = []
-        names = list(self.store.list_prefix_ordered(LOG_PREFIX))
-        for name in reversed(names):
-            record = json.loads(self.store.read(name))
-            actions = record["actions"]
+        for v in reversed(log_versions(self.store)):
+            record = read_record(self.store, v)
+            if record is None:
+                continue  # reclaimed by vacuum_log since the listing
+            actions = record.actions
             touched = sorted(
-                {next(iter(a.values())).get("table", "") for a in actions}
-                - {""}  # log-wide actions (protocol) name no table
+                # log-wide actions (protocol) name no table
+                {a.table for a in actions if not isinstance(a, Protocol)}
             )
             if table is not None and table not in touched:
                 continue
-            kinds = [next(iter(a)) for a in actions]
-            ops = sorted({_OP.get(k, k.upper()) for k in kinds})
-            ts_us = record.get("ts")
+            ops = sorted({_OP[type(a)] for a in actions})
             rows.append(
                 (
-                    int(name[len(LOG_PREFIX):]),
-                    datetime.datetime.fromtimestamp(
-                        ts_us / 1_000_000, tz=datetime.timezone.utc
-                    ).replace(tzinfo=None)
-                    if ts_us is not None
-                    else None,
+                    v,
+                    None if record.ts is None else _utc_naive(record.ts),
                     "+".join(ops) if ops else "EMPTY",
                     touched,
-                    sum(k == "add" for k in kinds),
-                    sum(k == "remove" for k in kinds),
+                    sum(isinstance(a, AddDataObject) for a in actions),
+                    sum(isinstance(a, RemoveDataObject) for a in actions),
                 )
             )
             if limit is not None and len(rows) >= limit:
@@ -4982,8 +4906,8 @@ actions.DropTable` for why clearing the live set on fold is
             raise ExistingTxError("vacuum must run outside a transaction")
         import time
 
-        log_names = self.store.list_prefix_ordered(LOG_PREFIX)
-        latest_version = int(log_names[-1][len(LOG_PREFIX):]) if log_names else 0
+        versions = log_versions(self.store)
+        latest_version = versions[-1] if versions else 0
         lo = max(1, latest_version - retain_versions)
         try:
             base = replay_log(self.store, as_of=lo)
@@ -5012,17 +4936,13 @@ actions.DropTable` for why clearing the live set on fold is
         for masked in base.dvs.values():
             for dv_list in masked.values():
                 keep.update(dv_list)
-        for name in log_names:
-            v = int(name[len(LOG_PREFIX):])
-            if v <= base.version:
-                continue
-            record = json.loads(self.store.read(name))
-            for a in record["actions"]:
-                if "add" in a:
-                    keep.add(a["add"]["name"])
-                    _keep_bloom_refs(a["add"].get("blooms", {}))
-                elif "dv" in a:
-                    keep.add(a["dv"]["dv_name"])
+        for record in iter_records(self.store, base.version):
+            for a in record.actions:
+                if isinstance(a, AddDataObject):
+                    keep.add(a.name)
+                    _keep_bloom_refs(a.blooms)
+                elif isinstance(a, AddDeletionVector):
+                    keep.add(a.dv_name)
         now = time.time()
         cutoff = now - min_age_seconds
         deleted = 0
@@ -5118,46 +5038,26 @@ actions.DropTable` for why clearing the live set on fold is
         newest = newest_checkpoint_version(self.store)
         if newest <= 0:
             return {"objects": [], "count": 0} if dry_run else 0
-        names = self.store.list_prefix_ordered(LOG_PREFIX)
+        versions = log_versions(self.store)
         keep_from = newest  # oldest version that must stay readable
-        if min_age_seconds > 0 and names:
+        if min_age_seconds > 0 and versions:
             cutoff_us = int((time.time() - min_age_seconds) * 1_000_000)
-
-            def _ts(name: str) -> int:
-                try:
-                    return int(json.loads(self.store.read(name)).get("ts", 0))
-                except Exception:
-                    # unreadable: probe as YOUNG — spares more history,
-                    # never reclaims more
-                    return cutoff_us + 1
-
-            # first version with ts > cutoff (ICT-monotonic bisect)
-            i, j = 0, len(names)
-            while i < j:
-                mid = (i + j) // 2
-                if _ts(names[mid]) > cutoff_us:
-                    j = mid
-                else:
-                    i = mid + 1
-            if i < len(names):
-                keep_from = min(keep_from, int(names[i][len(LOG_PREFIX):]))
+            # first version with ts > cutoff; an unreadable record
+            # probes as YOUNG — spares more history, never reclaims more
+            i = ts_bisect(
+                self.store, versions, lambda t: t > cutoff_us,
+                young_if_unreadable=True,
+            )
+            if i < len(versions):
+                keep_from = min(keep_from, versions[i])
         # the cut: newest checkpoint at or below keep_from — everything
         # at/above it survives, so every retained version keeps its
         # anchor checkpoint AND the records between (reconstructable)
-        horizon = 0
-        for name in self.store.list_prefix_ordered(CHECKPOINT_PREFIX):
-            version = int(name[len(CHECKPOINT_PREFIX):])
-            if version <= keep_from:
-                horizon = version
-            else:
-                break
+        ckpts = checkpoint_versions(self.store)
+        horizon = max((v for v in ckpts if v <= keep_from), default=0)
         if horizon <= 0:
             return {"objects": [], "count": 0} if dry_run else 0
-        if (
-            not dry_run
-            and names
-            and int(names[0][len(LOG_PREFIX):]) < horizon
-        ):
+        if not dry_run and versions and versions[0] < horizon:
             # about to create the FIRST version gap (or widen one):
             # stamp the truncatedHistory reader feature BEFORE deleting
             # so any client lacking dense-version gap detection fails
@@ -5166,26 +5066,15 @@ actions.DropTable` for why clearing the live set on fold is
             # mixed-fleet hazard). The stamp commit lands ABOVE the
             # horizon, so it always survives its own vacuum.
             self._commit_protocol_record([FEATURE_TRUNCATED_HISTORY], [])
-        deleted = 0
-        report: list[dict] = []
-        for name in names:
-            version = int(name[len(LOG_PREFIX):])
-            if version >= horizon:
-                break  # ascending: everything from here up is retained
+        # checkpoints published after the listing above are newer than
+        # the horizon: the listing covers everything this cut reclaims
+        report = reclaim_log(self.store, versions, ckpts, horizon, dry_run)
+
+        def result(**extra) -> Union[int, dict]:
+            # a dry run reports what a real run reclaims and counts
             if dry_run:
-                report.append({"name": name, "version": version})
-                continue
-            self.store.delete(name)
-            deleted += 1
-        for name in self.store.list_prefix_ordered(CHECKPOINT_PREFIX):
-            version = int(name[len(CHECKPOINT_PREFIX):])
-            if version >= horizon:
-                break
-            if dry_run:
-                report.append({"name": name, "version": version})
-                continue
-            self.store.delete(name)
-            deleted += 1
+                return {"objects": report, "count": len(report), **extra}
+            return len(report)
         # parquet sidecars retire with their checkpoints (version-
         # prefixed names; also sweeps orphans a crashed checkpointer
         # left below the horizon) — REFERENCE-AWARE: checkpoint part
@@ -5210,15 +5099,13 @@ actions.DropTable` for why clearing the live set on fold is
         if not candidates:
             # steady state at streaming cadence: nothing below the
             # horizon -> ZERO reference reads (r12 review finding 4)
-            if dry_run:
-                return {"objects": report, "count": len(report)}
-            return deleted
+            return result()
         referenced: set[str] = set()
         pending = {n for n, _ in candidates}
         retained = [
-            n
-            for n in self.store.list_prefix_ordered(CHECKPOINT_PREFIX)
-            if int(n[len(CHECKPOINT_PREFIX):]) >= horizon
+            checkpoint_name(v)
+            for v in checkpoint_versions(self.store)
+            if v >= horizon
         ]
         from delta_lake_experiment_spark.plans.protocol import (
             checkpoint_format,
@@ -5256,13 +5143,7 @@ actions.DropTable` for why clearing the live set on fold is
                     " retried next pass",
                     name, e, len(candidates),
                 )
-                if dry_run:
-                    return {
-                        "objects": report,
-                        "count": len(report),
-                        "skipped_part_sweep": name,
-                    }
-                return deleted
+                return result(skipped_part_sweep=name)
             if isinstance(ref, dict):
                 for ps in ref.values():
                     referenced.update(ps)
@@ -5274,14 +5155,10 @@ actions.DropTable` for why clearing the live set on fold is
         for name, version in candidates:
             if name in referenced:
                 continue  # reused by a retained checkpoint: live
-            if dry_run:
-                report.append({"name": name, "version": version})
-                continue
-            self.store.delete(name)
-            deleted += 1
-        if dry_run:
-            return {"objects": report, "count": len(report)}
-        return deleted
+            if not dry_run:
+                self.store.delete(name)
+            report.append({"name": name, "version": version})
+        return result()
 
     def _require_tx(self) -> _Tx:
         if self.tx is None:
@@ -5567,42 +5444,7 @@ actions.DropTable` for why clearing the live set on fold is
     def _effective_snapshot(self, tx: _Tx) -> Snapshot:
         """Snapshot + this tx's own actions (deletes/writes visible to
         self immediately, to others only after commit)."""
-        snap = Snapshot(version=tx.snapshot.version, tables=dict(tx.snapshot.tables))
-        # copy only MATERIALIZED tables; lazy (format-3 sidecar) tables
-        # share the hydration cache by reference and load on first touch
-        snap.live = {t: dict(objs) for t, objs in tx.snapshot.live.items()}
-        snap._lazy = tx.snapshot._lazy
-        snap.dvs = {
-            t: {o: list(names) for o, names in objs.items()}
-            for t, objs in tx.snapshot.dvs.items()
-        }
-        snap.pkeys = {t: list(ks) for t, ks in tx.snapshot.pkeys.items()}
-        snap.bloom_cols = {t: list(cs) for t, cs in tx.snapshot.bloom_cols.items()}
-        snap.cluster_cols = {t: list(cs) for t, cs in tx.snapshot.cluster_cols.items()}
-        snap.bucket_specs = {
-            t: {"cols": list(s["cols"]), "n": int(s["n"])}
-            for t, s in tx.snapshot.bucket_specs.items()
-        }
-        snap.checks = {t: dict(cs) for t, cs in tx.snapshot.checks.items()}
-        snap.col_maps = {t: dict(m) for t, m in tx.snapshot.col_maps.items()}
-        snap.retired = {t: list(r) for t, r in tx.snapshot.retired.items()}
-        snap.defaults = {
-            t: {c: dict(v) for c, v in m.items()}
-            for t, m in tx.snapshot.defaults.items()
-        }
-        snap.generated = {
-            t: dict(m) for t, m in tx.snapshot.generated.items()
-        }
-        snap.identity = {
-            t: {c: dict(v) for c, v in m.items()}
-            for t, m in tx.snapshot.identity.items()
-        }
-        snap.last_ts = tx.snapshot.last_ts
-        snap.born = dict(tx.snapshot.born)
-        snap.protocol = {
-            "rf": list(tx.snapshot.protocol["rf"]),
-            "wf": list(tx.snapshot.protocol["wf"]),
-        }
+        snap = tx.snapshot.copy()
         snap.apply(tx.id, tx.actions)
         snap.tables.update(tx.new_tables)
         return snap
@@ -6010,20 +5852,12 @@ actions.DropTable` for why clearing the live set on fold is
                 snap.protocol["wf"]
             ):
                 return
-            payload = {
-                "id": snap.version + 1,
-                "cv": 2,
-                "ts": max(int(self._clock() * 1_000_000), snap.last_ts + 1),
-                "actions": [
-                    Protocol(
-                        reader_features=sorted(rf),
-                        writer_features=sorted(wf),
-                    ).to_json()
-                ],
-            }
+            # the action serializes its feature lists sorted
+            protocol = Protocol(reader_features=rf, writer_features=wf)
             try:
-                self.store.put_if_absent(
-                    log_name(snap.version + 1), json.dumps(payload).encode()
+                write_record(
+                    self.store, snap.version + 1, [protocol], self._clock(),
+                    snap.last_ts,
                 )
                 return
             except ObjectExistsError:
@@ -6649,7 +6483,34 @@ def _encode_stat(v: Any) -> Any:
     return None
 
 
-def _scope_admits_add(scope: dict, add_body: dict) -> bool:
+def _is_real_meta(a: Action) -> bool:
+    """DDL-bearing metadata: a DROP, or a metadata record other than an
+    identity high-water advance (``ident_only``)."""
+    return isinstance(a, DropTable) or (
+        isinstance(a, ChangeMetadata) and not a.ident_only
+    )
+
+
+def _rewrite_targets(actions) -> set[str]:
+    """Names of the data objects ``actions`` remove or mask."""
+    out: set[str] = set()
+    for a in actions:
+        if isinstance(a, RemoveDataObject):
+            out.add(a.name)
+        elif isinstance(a, AddDeletionVector):
+            out.update(a.objects)
+    return out
+
+
+def _utc_naive(micros: int) -> datetime.datetime:
+    """A commit clock (epoch micros) as the naive-UTC datetime Spark's
+    TimestampType reads."""
+    return datetime.datetime.fromtimestamp(
+        micros / 1_000_000, tz=datetime.timezone.utc
+    ).replace(tzinfo=None)
+
+
+def _scope_admits_add(scope: dict, add: AddDataObject) -> bool:
     """Could the interleaved fresh-insert add hold a row inside this
     recorded read scope? True unless PROVABLY disjoint — the same
     conservative direction as stats file pruning (an add without stats
@@ -6661,12 +6522,11 @@ def _scope_admits_add(scope: dict, add_body: dict) -> bool:
         return True
     buckets = scope.get("buckets")
     if buckets is not None:
-        bid = add_body.get("bucket_id")
-        if bid is not None and int(bid) not in buckets:
+        if add.bucket_id is not None and add.bucket_id not in buckets:
             return False  # disjoint bucket: cannot hold a scoped row
     bounds = scope.get("bounds")
     if bounds:
-        return _stats_intersect(add_body.get("stats") or {}, bounds)
+        return _stats_intersect(add.stats or {}, bounds)
     return True
 
 

@@ -323,22 +323,27 @@ Action = (
 )
 
 
+def add_from_json(a: dict[str, Any]) -> AddDataObject:
+    """An ``add`` body (log records and inline checkpoint live lists
+    share it); keys older records lack take their defaults."""
+    return AddDataObject(
+        name=a["name"],
+        table=a["table"],
+        tx_id=int(a["tx_id"]),
+        num_rows=int(a.get("num_rows", 0)),
+        size=int(a.get("size", 0)),
+        stats=a.get("stats", {}),
+        blooms=a.get("blooms", {}),
+        bucket_id=(
+            int(a["bucket_id"]) if a.get("bucket_id") is not None else None
+        ),
+        rewrite=bool(a.get("rw", False)),
+    )
+
+
 def action_from_json(obj: dict[str, Any]) -> Action:
     if "add" in obj:
-        a = obj["add"]
-        return AddDataObject(
-            name=a["name"],
-            table=a["table"],
-            tx_id=int(a["tx_id"]),
-            num_rows=int(a.get("num_rows", 0)),
-            size=int(a.get("size", 0)),
-            stats=a.get("stats", {}),
-            blooms=a.get("blooms", {}),
-            bucket_id=(
-                int(a["bucket_id"]) if a.get("bucket_id") is not None else None
-            ),
-            rewrite=bool(a.get("rw", False)),
-        )
+        return add_from_json(obj["add"])
     if "remove" in obj:
         r = obj["remove"]
         return RemoveDataObject(name=r["name"], table=r["table"], tx_id=int(r["tx_id"]))

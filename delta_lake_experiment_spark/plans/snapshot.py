@@ -15,14 +15,20 @@ Scale notes (100 TB / 10⁶-commit log):
   the standard Delta-protocol fix.
 - ``Snapshot.live_files`` + per-file stats let scans hand Spark a pruned
   path list; Parquet row-group stats then prune further inside each file.
+
+This module is the only owner of the commit-log record format, as the
+reference's transactions.go is: other modules go through the log
+helpers below and see records as :class:`LogRecord` values.
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from typing import Any, Callable, Iterator, Optional
 
+from delta_lake_experiment_spark.errors import HistoryTruncatedError
 from delta_lake_experiment_spark.plans.actions import (
     Action,
     AddDataObject,
@@ -32,6 +38,7 @@ from delta_lake_experiment_spark.plans.actions import (
     Protocol,
     RemoveDataObject,
     action_from_json,
+    add_from_json,
 )
 from delta_lake_experiment_spark.plans.protocol import (
     CHECKPOINT_FORMAT_SIDECAR_BY_TABLE,
@@ -79,6 +86,201 @@ def checkpoint_part_prefix(version: int) -> str:
     """Sidecar objects of checkpoint ``version`` share this name prefix
     so retention can reclaim them with their checkpoint."""
     return f"{CHECKPOINT_PART_PREFIX}{version:020d}_"
+
+
+# -- the commit log ---------------------------------------------------------
+
+
+@dataclass
+class LogRecord:
+    """One committed transaction: the JSON object ``log_name(version)``
+    (keys ``id``, ``cv``, ``ts``, ``actions`` and optional ``txn``)."""
+
+    version: int
+    actions: list[Action]
+    # in-commit wall-clock (epoch micros); None = a record written
+    # before timestamps were recorded
+    ts: Optional[int] = None
+    # conflict-format version: >= 2 means the add actions carry rewrite
+    # provenance ("rw"); 0 = a legacy record predating the tag
+    cv: int = 0
+    # (app_id, batch) idempotence marker of an exactly-once streaming sink
+    txn: Optional[tuple[str, int]] = None
+
+
+def log_versions(store: ObjectStorage, after: Optional[int] = None) -> list[int]:
+    """Committed log versions, ascending, from ONE listing. ``after``
+    anchors it past that version (S3 StartAfter), so a reader that
+    knows its position pays O(tail) listed keys, not O(history)."""
+    names = store.list_prefix_ordered(
+        LOG_PREFIX, start_after=None if after is None else log_name(after)
+    )
+    return [int(n[len(LOG_PREFIX):]) for n in names]
+
+
+def checkpoint_versions(
+    store: ObjectStorage, after: Optional[int] = None
+) -> list[int]:
+    """Checkpoint versions, ascending, from ONE listing (anchored past
+    ``after`` when given, like :func:`log_versions`)."""
+    names = store.list_prefix_ordered(
+        CHECKPOINT_PREFIX,
+        start_after=None if after is None else checkpoint_name(after),
+    )
+    return [int(n[len(CHECKPOINT_PREFIX):]) for n in names]
+
+
+def read_record(store: ObjectStorage, version: int) -> Optional[LogRecord]:
+    """Record ``version``, or None when it is GONE (a concurrent
+    ``vacuum_log`` reclaimed it after the caller listed it). A record
+    that exists but fails to read re-raises: skipping a corrupt newest
+    drop record would make the drop walk restore an OLDER incarnation —
+    a silent wrong answer where a loud store error was available."""
+    name = log_name(version)
+    try:
+        d = json.loads(store.read(name))
+    except Exception:
+        if store.exists(name) is False:
+            return None
+        raise
+    txn = d.get("txn")
+    return LogRecord(
+        version=int(d["id"]),
+        actions=[action_from_json(a) for a in d["actions"]],
+        ts=None if d.get("ts") is None else int(d["ts"]),
+        cv=int(d.get("cv", 0)),
+        txn=None if not txn else (str(txn["app_id"]), int(txn["batch"])),
+    )
+
+
+def write_record(
+    store: ObjectStorage,
+    version: int,
+    actions: list[Action],
+    now: float,
+    floor_ts: int,
+    txn: Optional[tuple[str, int]] = None,
+) -> None:
+    """The commit point: put-if-absent of record ``version``; raises
+    ``ObjectExistsError`` when another writer committed it first. The
+    in-commit wall-clock is max(``now``, ``floor_ts`` + 1) over the
+    newest stamp the writer has seen (Delta's ICT), so a skewed
+    writer's clock never makes :func:`ts_bisect` misplace a bound;
+    ordering authority stays with the version."""
+    payload: dict[str, Any] = {
+        "id": version,
+        # conflict-format version: >=2 means this commit's add actions
+        # carry rewrite provenance ("rw"), so reconciliation may trust
+        # an untagged add to be a FRESH insert. Records without it
+        # predate the tag and fall back to the commit-granular
+        # exemption.
+        "cv": 2,
+        "ts": max(int(now * 1_000_000), floor_ts + 1),
+        "actions": [a.to_json() for a in actions],
+    }
+    if txn is not None:
+        payload["txn"] = {"app_id": txn[0], "batch": int(txn[1])}
+    store.put_if_absent(log_name(version), json.dumps(payload).encode())
+
+
+def ts_bisect(
+    store: ObjectStorage,
+    versions: list[int],
+    pred: Callable[[int], bool],
+    young_if_unreadable: bool = False,
+) -> int:
+    """Index of the first of ``versions`` (ascending) whose commit
+    timestamp satisfies ``pred`` — monotone in the timestamp — or
+    ``len(versions)``, in O(log n) record reads. Exact because
+    :func:`write_record` stamps monotonically, so the recorded clocks
+    are sorted even under writer skew; records without a timestamp
+    read as 0, and records written before monotonic stamping may hold
+    skewed clocks (resolution there is best-effort, as Delta documents
+    for ICT enablement). With ``young_if_unreadable`` a record that is
+    gone or fails to read satisfies ``pred`` (``vacuum_log``'s rule:
+    it reads as YOUNG — spares more history, never reclaims more);
+    otherwise a failing read re-raises and a gone record — reclaimed
+    oldest-first — reads as 0."""
+
+    def satisfies(version: int) -> bool:
+        try:
+            rec = read_record(store, version)
+        except Exception:
+            if not young_if_unreadable:
+                raise
+            return True
+        if rec is None:
+            return young_if_unreadable or pred(0)
+        return pred(rec.ts or 0)
+
+    return bisect.bisect_left(versions, True, key=satisfies)
+
+
+def iter_records(
+    store: ObjectStorage,
+    after: int,
+    upto: Optional[int] = None,
+    read: Callable[[ObjectStorage, int], Optional[LogRecord]] = read_record,
+) -> Iterator[LogRecord]:
+    """Records ``(after, upto]`` ascending (to the newest when ``upto``
+    is None) from ONE listing anchored past ``after``; ``read`` lets a
+    caller serve records from its own cache. Log versions are dense by
+    construction (a commit is a put-if-absent of exactly newest+1), so
+    a gap — or a listed record gone before its read — means
+    ``vacuum_log`` reclaimed records the caller needs: raises
+    :class:`HistoryTruncatedError` instead of silently serving a state
+    missing commits. A gap entirely above ``upto`` is not needed (an
+    exact-checkpoint as_of is still served with a truncated tail)."""
+    expected = after + 1
+    for v in log_versions(store, after):
+        if upto is not None and expected > upto:
+            return
+        rec = read(store, v) if v == expected else None
+        if rec is None:
+            end = v if v == expected else v - 1
+            # floor = the oldest version a reader can still serve
+            # (earliest retained checkpoint anchoring the surviving
+            # records) — what callers retry with, NOT the base this
+            # walk anchored on (which sits BELOW the horizon for a deep
+            # time travel). Best effort: an inconsistent store falls
+            # back to the base.
+            try:
+                floor = earliest_reconstructable_version(store)
+            except Exception:
+                floor = after
+            raise HistoryTruncatedError(
+                f"log records v{expected}..v{end} have been reclaimed by"
+                " vacuum_log (retention horizon): versions above"
+                f" v{after} and below v{end + 1} are no longer"
+                f" reconstructable - time travel at or above v{floor},"
+                " or configure a longer vacuum_log retention window",
+                floor=floor,
+                base=after,
+            )
+        yield rec
+        expected = v + 1
+
+
+def reclaim_log(
+    store: ObjectStorage,
+    versions: list[int],
+    checkpoints: list[int],
+    below: int,
+    dry_run: bool,
+) -> list[dict]:
+    """``vacuum_log``'s cut: delete the log records and checkpoints of
+    the listed (ascending) versions below ``below`` — or, with
+    ``dry_run``, only report them. Returns ``{"name", "version"}`` per
+    object reclaimed."""
+    out = []
+    for name_of, listed in ((log_name, versions), (checkpoint_name, checkpoints)):
+        for v in listed:
+            if v >= below:
+                break  # ascending: everything from here up is retained
+            if not dry_run:
+                store.delete(name_of(v))
+            out.append({"name": name_of(v), "version": v})
+    return out
 
 
 def _parts_to_live(store: ObjectStorage, parts: list[str]) -> dict:
@@ -148,10 +350,6 @@ class _LazyLive:
             # same no-masking rule replay_log's checkpoint path follows
             # (pass-2 review finding).
             if any(self.store.exists(p) is False for p in parts):
-                from delta_lake_experiment_spark.errors import (
-                    HistoryTruncatedError,
-                )
-
                 raise HistoryTruncatedError(
                     f"checkpoint sidecar parts for table {table!r} are"
                     " gone - this snapshot's base checkpoint was"
@@ -407,19 +605,13 @@ class Snapshot:
                 # sidecar REUSE, so the next checkpoint drops its part
                 # references and retention reclaims the parts.
                 self.live[act.table] = {}
-                self.tables.pop(act.table, None)
-                self.born.pop(act.table, None)
-                self.dvs.pop(act.table, None)
-                self.pkeys.pop(act.table, None)
-                self.bloom_cols.pop(act.table, None)
-                self.cluster_cols.pop(act.table, None)
-                self.bucket_specs.pop(act.table, None)
-                self.checks.pop(act.table, None)
-                self.col_maps.pop(act.table, None)
-                self.retired.pop(act.table, None)
-                self.defaults.pop(act.table, None)
-                self.generated.pop(act.table, None)
-                self.identity.pop(act.table, None)
+                for carrier in (
+                    self.tables, self.born, self.dvs, self.pkeys,
+                    self.bloom_cols, self.cluster_cols, self.bucket_specs,
+                    self.checks, self.col_maps, self.retired,
+                    self.defaults, self.generated, self.identity,
+                ):
+                    carrier.pop(act.table, None)
             elif isinstance(act, Protocol):
                 # monotone union (order-independent: concurrent
                 # upgrades reconcile without conflict), then gate —
@@ -438,6 +630,51 @@ class Snapshot:
             else:  # pragma: no cover
                 raise ValueError(f"unknown action {act!r}")
         self.version = max(self.version, tx_id)
+
+    def copy(self) -> "Snapshot":
+        """Independent copy for a transaction's own view (the client
+        folds the tx's staged actions into it on every scan, delete
+        and buffer flush). Materialized ``live`` dicts and every other
+        carrier are copied, so folds never leak into this snapshot;
+        lazy (format-3 sidecar) tables are not materialized here —
+        ``_lazy`` is shared by reference, so each lazy table's parts
+        are still read at most once per process."""
+        return Snapshot(
+            version=self.version,
+            tables=dict(self.tables),
+            live={t: dict(objs) for t, objs in self.live.items()},
+            dvs={
+                t: {o: list(names) for o, names in objs.items()}
+                for t, objs in self.dvs.items()
+            },
+            pkeys={t: list(ks) for t, ks in self.pkeys.items()},
+            bloom_cols={t: list(cs) for t, cs in self.bloom_cols.items()},
+            cluster_cols={t: list(cs) for t, cs in self.cluster_cols.items()},
+            bucket_specs={
+                t: {"cols": list(s["cols"]), "n": int(s["n"])}
+                for t, s in self.bucket_specs.items()
+            },
+            checks={t: dict(cs) for t, cs in self.checks.items()},
+            col_maps={t: dict(m) for t, m in self.col_maps.items()},
+            retired={t: list(r) for t, r in self.retired.items()},
+            defaults={
+                t: {c: dict(v) for c, v in m.items()}
+                for t, m in self.defaults.items()
+            },
+            generated={t: dict(m) for t, m in self.generated.items()},
+            identity={
+                t: {c: dict(v) for c, v in m.items()}
+                for t, m in self.identity.items()
+            },
+            txns=dict(self.txns),
+            born=dict(self.born),
+            protocol={
+                "rf": list(self.protocol["rf"]),
+                "wf": list(self.protocol["wf"]),
+            },
+            last_ts=self.last_ts,
+            _lazy=self._lazy,
+        )
 
     # -- serialization (checkpoints) ------------------------------------
 
@@ -724,24 +961,7 @@ class Snapshot:
         snap.born = {t: int(v) for t, v in d.get("born", {}).items()}
         snap.last_ts = int(d.get("last_ts", 0))
         for t, objs in d["live"].items():
-            snap.live[t] = {
-                a["name"]: AddDataObject(
-                    name=a["name"],
-                    table=a["table"],
-                    tx_id=int(a["tx_id"]),
-                    num_rows=int(a.get("num_rows", 0)),
-                    size=int(a.get("size", 0)),
-                    stats=a.get("stats", {}),
-                    blooms=a.get("blooms", {}),
-                    bucket_id=(
-                        int(a["bucket_id"])
-                        if a.get("bucket_id") is not None
-                        else None
-                    ),
-                    rewrite=bool(a.get("rw", False)),
-                )
-                for a in objs
-            }
+            snap.live[t] = {a["name"]: add_from_json(a) for a in objs}
         return snap
 
 
@@ -860,19 +1080,17 @@ def newest_checkpoint_version(store: ObjectStorage) -> int:
     (usually empty) instead of a full ``_checkpoint_`` prefix LIST."""
     hint = read_last_checkpoint(store)
     if hint is not None:
-        newer = store.list_prefix_ordered(
-            CHECKPOINT_PREFIX, start_after=checkpoint_name(hint)
-        )
+        newer = checkpoint_versions(store, after=hint)
         if newer:
-            return int(newer[-1][len(CHECKPOINT_PREFIX):])
+            return newer[-1]
         # trust the pointer only when its checkpoint object actually
         # exists (a corrupt/ahead pointer must not anchor vacuum_log's
         # horizon); exists()=None (capability unknown) trusts it —
         # every real backend answers
         if store.exists(checkpoint_name(hint)) is not False:
             return hint
-    ckpts = store.list_prefix_ordered(CHECKPOINT_PREFIX)
-    return int(ckpts[-1][len(CHECKPOINT_PREFIX):]) if ckpts else 0
+    ckpts = checkpoint_versions(store)
+    return ckpts[-1] if ckpts else 0
 
 
 def earliest_reconstructable_version(
@@ -887,19 +1105,14 @@ def earliest_reconstructable_version(
     exactly; a store violating the suffix invariant (external deletion)
     fails replay's own gap detection rather than silently serving a
     partial state."""
-    logs = store.list_prefix_ordered(LOG_PREFIX)
-    first_log = int(logs[0][len(LOG_PREFIX):]) if logs else None
-    ckpts = [
-        int(n[len(CHECKPOINT_PREFIX):])
-        for n in store.list_prefix_ordered(CHECKPOINT_PREFIX)
-    ]
+    logs = log_versions(store)
+    first_log = logs[0] if logs else None
+    ckpts = checkpoint_versions(store)
     if first_log is None or first_log == 1:
         return at_least  # full history retained
     for c in ckpts:
         if c + 1 >= first_log:
             return max(c, at_least)
-    from delta_lake_experiment_spark.errors import HistoryTruncatedError
-
     raise HistoryTruncatedError(
         "no retained checkpoint anchors the surviving log records -"
         " store metadata is inconsistent (vacuum_log never produces"
@@ -925,14 +1138,10 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
     ``_last_checkpoint`` pointer and anchors the log listing past it
     (``start_after`` — S3 StartAfter), so a ``new_tx`` on a 10⁶-commit
     log costs O(commits since checkpoint) LIST/read calls, not ~1 000
-    LIST pages. Log versions are dense by construction (a commit is a
-    put-if-absent of exactly newest+1), so a gap in the listed tail
-    means ``vacuum_log`` reclaimed the records: replay raises
-    :class:`HistoryTruncatedError` (with the reconstructable floor)
-    instead of silently serving a state missing commits.
+    LIST pages. A gap in the listed tail (records ``vacuum_log``
+    reclaimed) raises :class:`HistoryTruncatedError` with the
+    reconstructable floor — see :func:`iter_records`.
     """
-    from delta_lake_experiment_spark.errors import HistoryTruncatedError
-
     snap = Snapshot(version=0)
     if as_of is None:
         base = newest_checkpoint_version(store)
@@ -978,10 +1187,7 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
         base = None
         if hint is not None and hint <= as_of:
             base = hint
-            for name in store.list_prefix_ordered(
-                CHECKPOINT_PREFIX, start_after=checkpoint_name(hint)
-            ):
-                version = int(name[len(CHECKPOINT_PREFIX):])
+            for version in checkpoint_versions(store, after=hint):
                 if version <= as_of:
                     base = version
                 else:
@@ -991,11 +1197,12 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
             except Exception:
                 snap, base = Snapshot(version=0), None  # stale pointer
         if base is None:
-            for name in reversed(store.list_prefix_ordered(CHECKPOINT_PREFIX)):
-                version = int(name[len(CHECKPOINT_PREFIX):])
+            for version in reversed(checkpoint_versions(store)):
                 if version <= as_of:
                     try:
-                        snap = Snapshot.from_checkpoint(store.read(name), store)
+                        snap = Snapshot.from_checkpoint(
+                            store.read(checkpoint_name(version)), store
+                        )
                         break
                     except Exception:
                         # a concurrent vacuum_log reclaimed this
@@ -1005,49 +1212,10 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
                         # below raises the NAMED truncation error
                         # instead of a raw store failure
                         continue
-    base_version = snap.version
-    expected = snap.version + 1
-    for name in store.list_prefix_ordered(
-        LOG_PREFIX, start_after=log_name(snap.version)
-    ):
-        version = int(name[len(LOG_PREFIX):])
-        if version <= snap.version:
-            continue
-        if version != expected:
-            # records (expected .. version-1) are gone; only raise when
-            # the request actually needs them (an exact-checkpoint
-            # as_of is still served even with a truncated tail above)
-            if as_of is None or expected <= as_of:
-                # floor = the oldest version a reader can still serve
-                # (earliest retained checkpoint anchoring the surviving
-                # records) — what callers retry with, NOT the base
-                # checkpoint this replay happened to anchor on (which
-                # sits BELOW the horizon for a deep time travel). Best
-                # effort: an inconsistent store falls back to the base.
-                try:
-                    floor = earliest_reconstructable_version(store)
-                except Exception:
-                    floor = base_version
-                raise HistoryTruncatedError(
-                    f"log records v{expected}..v{version - 1} have been"
-                    " reclaimed by vacuum_log (retention horizon):"
-                    f" versions above the base checkpoint v{base_version}"
-                    f" and below v{version} are no longer reconstructable"
-                    f" - time travel at or above v{floor}, or configure"
-                    " a longer vacuum_log retention window",
-                    floor=floor,
-                    base=base_version,
-                )
-            break
-        if as_of is not None and version > as_of:
-            break
-        record = json.loads(store.read(name))
-        actions = [action_from_json(a) for a in record["actions"]]
-        snap.apply(int(record["id"]), actions)
-        txn = record.get("txn")
-        if txn:
-            app = str(txn["app_id"])
-            snap.txns[app] = max(snap.txns.get(app, -1), int(txn["batch"]))
-        snap.last_ts = max(snap.last_ts, int(record.get("ts", 0)))
-        expected = version + 1
+    for record in iter_records(store, snap.version, as_of):
+        snap.apply(record.version, record.actions)
+        if record.txn:
+            app, batch = record.txn
+            snap.txns[app] = max(snap.txns.get(app, -1), batch)
+        snap.last_ts = max(snap.last_ts, record.ts or 0)
     return snap

@@ -77,7 +77,6 @@ stream's lag, the same operational rule as Delta's.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 from typing import Any, Iterator, Optional
 
@@ -87,10 +86,20 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from delta_lake_experiment_spark.plans.actions import (
+    AddDataObject,
+    AddDeletionVector,
+    ChangeMetadata,
+    DropTable,
+    RemoveDataObject,
+)
 from delta_lake_experiment_spark.plans.snapshot import (
-    LOG_PREFIX,
-    log_name,
+    LogRecord,
+    iter_records,
+    log_versions,
+    read_record,
     replay_log,
+    ts_bisect,
 )
 from delta_lake_experiment_spark.storage.objectstore import LocalObjectStorage
 
@@ -266,7 +275,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # version just below the first commit whose recorded
             # wall-clock >= bound; a bound past the newest commit tails
             # only FUTURE commits (the friendly choice for a tailing
-            # source). Resolution is one ascending metadata walk.
+            # source). Resolution is one timestamp bisect: O(log n)
+            # record reads.
             import datetime as _dt
 
             try:
@@ -283,30 +293,14 @@ class EngineTableStreamReader(DataSourceStreamReader):
             store0 = self._bound if self._bound is not None else _resolve_store(
                 self.store_factory_key, self.root
             )
-            names = store0.list_prefix_ordered(LOG_PREFIX)
-            # binary search the first commit with ts >= bound: O(log n)
-            # record reads instead of a full ascending walk. Exactness
-            # rests on in-commit-timestamp monotonicity (the client
-            # stamps max(now, prev_ts + 1) — Delta's ICT — so recorded
-            # clocks never regress even under writer clock skew).
-            # Pre-ICT records may hold skewed clocks; resolution inside
-            # that legacy region is best-effort (Delta's documented
-            # ICT-enablement semantics), and bounds targeting
-            # post-upgrade commits stay exact.
-            i, j = 0, len(names)
-            while i < j:
-                mid = (i + j) // 2
-                record = json.loads(store0.read(names[mid]))
-                if int(record.get("ts", 0)) >= bound:
-                    j = mid
-                else:
-                    i = mid + 1
-            if i < len(names):
-                start = int(names[i][len(LOG_PREFIX):]) - 1
+            versions = log_versions(store0)
+            i = ts_bisect(store0, versions, lambda t: t >= bound)
+            if i < len(versions):
+                start = versions[i] - 1
             else:
                 # bound past the newest commit: tail only FUTURE
                 # commits (the friendly choice for a tailing source)
-                start = int(names[-1][len(LOG_PREFIX):]) if names else 0
+                start = versions[-1] if versions else 0
             self.start_version = start
         self.skip_change_commits = (
             str(options.get("skipchangecommits", "false")).lower() == "true"
@@ -407,13 +401,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
         # on a 10⁶-commit log pays O(new commits) LIST keys per trigger
         # instead of re-paging the whole _log_ prefix every trigger
         anchor = self._pos if self._pos is not None else self.start_version
-        after = log_name(anchor) if anchor is not None and anchor >= 0 else None
-        names = store.list_prefix_ordered(LOG_PREFIX, start_after=after)
-        latest = (
-            int(names[-1][len(LOG_PREFIX):])
-            if names
-            else (anchor if anchor is not None and anchor >= 0 else 0)
-        )
+        versions = log_versions(store, after=anchor if anchor >= 0 else None)
+        latest = versions[-1] if versions else max(anchor, 0)
         if not (self.max_commits or self.max_files or self.max_bytes):
             return {"version": latest}
         if self._snap is not None:
@@ -459,21 +448,17 @@ class EngineTableStreamReader(DataSourceStreamReader):
             fbudget = self.max_files or None
             bbudget = self.max_bytes or None
             chosen = base
-            for name in names:
-                v = int(name[len(LOG_PREFIX):])
+            for v in versions:
                 if v <= base:
                     continue
                 if v > end:
                     break
-                record = self._log_record(store, name, v)
-                n_adds, n_bytes, unknown = 0, 0, False
-                for act in record.get("actions", []):
-                    if "add" in act and act["add"].get("table") == self.table:
-                        n_adds += 1
-                        sz = int(act["add"].get("size", 0))
-                        if sz <= 0 and int(act["add"].get("num_rows", 0)) > 0:
-                            unknown = True
-                        n_bytes += max(sz, 0)
+                adds = self._table_actions(self._log_record(store, v))[0]
+                n_adds, n_bytes, unknown = len(adds), 0, False
+                for add in adds:
+                    if add.size <= 0 and add.num_rows > 0:
+                        unknown = True
+                    n_bytes += max(add.size, 0)
                 if chosen > base:
                     if fbudget is not None and n_adds > fbudget:
                         break
@@ -540,13 +525,39 @@ class EngineTableStreamReader(DataSourceStreamReader):
                     k: f for k, f in self._snap_files.items() if k == pinned
                 }
 
-    def _log_record(self, store, name: str, version: int) -> dict:
-        """Parsed log record for ``version`` (committed records are
-        immutable — cached for the trigger's three consumers)."""
+    def _table_actions(self, record: Optional[LogRecord]):
+        """This table's actions in ``record`` (None — reclaimed — has
+        none): ``(adds, removes, dvs, dropped, schema_changed)``.
+        Identity high-water-mark advances ("io") are not schema
+        changes: they change nothing a reader's shape depends on, and
+        every insert into an identity table carries one, so counting
+        them would make such tables permanently unstreamable."""
+        adds, removes, dvs = [], [], []
+        dropped = schema_changed = False
+        for act in record.actions if record is not None else ():
+            if getattr(act, "table", None) != self.table:
+                continue
+            if isinstance(act, AddDataObject):
+                adds.append(act)
+            elif isinstance(act, RemoveDataObject):
+                removes.append(act)
+            elif isinstance(act, AddDeletionVector):
+                dvs.append(act)
+            elif isinstance(act, DropTable):
+                dropped = True
+            elif isinstance(act, ChangeMetadata) and not act.ident_only:
+                schema_changed = True
+        return adds, removes, dvs, dropped, schema_changed
+
+    def _log_record(self, store, version: int) -> Optional[LogRecord]:
+        """Log record ``version``, None when vacuum_log reclaimed it
+        (committed records are immutable — cached for the trigger's
+        three consumers)."""
         rec = self._records.get(version)
         if rec is None:
-            rec = json.loads(store.read(name))
-            self._records[version] = rec
+            rec = read_record(store, version)
+            if rec is not None:
+                self._records[version] = rec
         return rec
 
     def _snapshot_files(self, store, version: int) -> list:
@@ -571,44 +582,32 @@ class EngineTableStreamReader(DataSourceStreamReader):
         metadata — the pinned shape would read it wrong."""
         if hi <= lo:
             return
-        for name in store.list_prefix_ordered(
-            LOG_PREFIX, start_after=log_name(max(lo, 0))
-        ):
-            v = int(name[len(LOG_PREFIX):])
-            if v <= lo:
-                continue
+        for v in log_versions(store, after=max(lo, 0)):
             if v > hi:
                 break
-            record = self._log_record(store, name, v)
-            for act in record.get("actions", []):
-                kind = next(iter(act))
-                if kind == "drop" and act[kind].get("table") == self.table:
-                    # a drop between the pin and this trigger ends the
-                    # lineage: without this check the snapshot branch
-                    # would replay an empty live set and emit NOTHING
-                    # silently — or, after a same-schema recreate,
-                    # silently splice the NEW lineage's rows onto the
-                    # pre-drop pin
-                    raise TableDroppedError(
-                        f"engine_table source: commit v{v} dropped table"
-                        f" {self.table!r} after the stream pinned its"
-                        f" schema (v{lo}) - start a NEW stream (fresh"
-                        " checkpoint) against any recreate"
-                    )
-                if (
-                    kind == "metadata"
-                    and act[kind].get("table") == self.table
-                    # identity high-water-mark advances ("io") change
-                    # nothing a reader's shape depends on — skipping
-                    # them is what keeps identity tables streamable
-                    and not act[kind].get("io")
-                ):
-                    raise SchemaChangedError(
-                        f"engine_table source: commit v{v} changed table"
-                        f" {self.table!r} metadata after the stream pinned"
-                        f" its schema (v{lo}) - restart the stream to"
-                        " adopt the new schema (Delta's contract)"
-                    )
+            _, _, _, dropped, schema_changed = self._table_actions(
+                self._log_record(store, v)
+            )
+            if dropped:
+                # a drop between the pin and this trigger ends the
+                # lineage: without this check the snapshot branch
+                # would replay an empty live set and emit NOTHING
+                # silently — or, after a same-schema recreate,
+                # silently splice the NEW lineage's rows onto the
+                # pre-drop pin
+                raise TableDroppedError(
+                    f"engine_table source: commit v{v} dropped table"
+                    f" {self.table!r} after the stream pinned its"
+                    f" schema (v{lo}) - start a NEW stream (fresh"
+                    " checkpoint) against any recreate"
+                )
+            if schema_changed:
+                raise SchemaChangedError(
+                    f"engine_table source: commit v{v} changed table"
+                    f" {self.table!r} metadata after the stream pinned"
+                    f" its schema (v{lo}) - restart the stream to"
+                    " adopt the new schema (Delta's contract)"
+                )
 
     def _raise_on_vacuumed(self, store, v: int, names) -> None:
         """CDF replays HISTORY by object path, but VACUUM physically
@@ -742,11 +741,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # the CREATE commit, which a fresh stream's pinned_version
             # already covers). A real gap inside (lo, hi] still fails
             # loudly below.
-            tail0 = store.list_prefix_ordered(
-                LOG_PREFIX, start_after=log_name(max(lo, 0))
-            )
-            first = int(tail0[0][len(LOG_PREFIX):]) if tail0 else None
-            recoverable = first is not None and first == lo + 1
+            first = lo + 1
+            recoverable = log_versions(store, after=max(lo, 0))[:1] == [first]
             if recoverable:
                 try:
                     table_known = (
@@ -766,63 +762,40 @@ class EngineTableStreamReader(DataSourceStreamReader):
                     " retained version)) to resync"
                 ) from e
         parts: list[InputPartition] = []
-        expected = lo + 1
-        for name in store.list_prefix_ordered(
-            LOG_PREFIX, start_after=log_name(max(lo, 0))
-        ):
-            v = int(name[len(LOG_PREFIX):])
-            if v <= lo:
-                continue
-            if v > hi:
-                break
-            if v != expected:
-                # log versions are dense; a gap means vacuum_log
-                # reclaimed records this stream still needed — refuse
-                # loudly instead of silently dropping the commits
-                raise ValueError(
-                    f"engine_table source: log records v{expected}.."
-                    f"v{v - 1} have been reclaimed by vacuum_log while"
-                    " this stream was positioned below the retention"
-                    " horizon - restart the stream with a fresh"
-                    " checkpoint (or .option('startingVersion', a"
-                    " retained version)) to resync"
+        try:
+            records = list(iter_records(store, lo, hi, read=self._log_record))
+        except HistoryTruncatedError as e:
+            # log versions are dense; a gap means vacuum_log reclaimed
+            # records this stream still needed — refuse loudly instead
+            # of silently dropping the commits
+            raise ValueError(
+                f"engine_table source: log records in v{lo + 1}..v{hi}"
+                " have been reclaimed by vacuum_log while this stream"
+                " was positioned below the retention horizon - restart"
+                " the stream with a fresh checkpoint (or"
+                " .option('startingVersion', a retained version)) to"
+                " resync"
+            ) from e
+        for record in records:
+            v = record.version
+            adds, removes, dvs, dropped, schema_changed = (
+                self._table_actions(record)
+            )
+            if dropped:
+                # end of the lineage: named and terminal in BOTH
+                # modes (append tail and CDF) — silently skipping
+                # would wedge the stream on a table that no longer
+                # exists, or worse, splice a recreate's rows onto
+                # the old lineage
+                raise TableDroppedError(
+                    f"engine_table source: commit v{v} dropped table"
+                    f" {self.table!r} - the stream cannot continue"
+                    " past the end of the lineage; start a NEW"
+                    " stream (fresh checkpoint) against any"
+                    " recreate"
                 )
-            expected = v + 1
-            record = self._log_record(store, name, v)
-            adds, removes, dvs, metas = [], [], [], 0
-            for act in record.get("actions", []):
-                kind = next(iter(act))
-                body = act[kind]
-                if body.get("table") != self.table:
-                    continue
-                if kind == "drop":
-                    # end of the lineage: named and terminal in BOTH
-                    # modes (append tail and CDF) — silently skipping
-                    # would wedge the stream on a table that no longer
-                    # exists, or worse, splice a recreate's rows onto
-                    # the old lineage
-                    raise TableDroppedError(
-                        f"engine_table source: commit v{v} dropped table"
-                        f" {self.table!r} - the stream cannot continue"
-                        " past the end of the lineage; start a NEW"
-                        " stream (fresh checkpoint) against any"
-                        " recreate"
-                    )
-                if kind == "add":
-                    adds.append(body)
-                elif kind == "remove":
-                    removes.append(body)
-                elif kind == "dv":
-                    dvs.append(body)
-                elif kind == "metadata":
-                    # identity high-water-mark advances ("io") don't
-                    # change the read shape: every insert into an
-                    # identity table carries one, and counting them
-                    # would make such tables permanently unstreamable
-                    if not body.get("io"):
-                        metas += 1
             changes = len(removes) + len(dvs)
-            if metas:
+            if schema_changed:
                 # metadata commits AT OR BEFORE the reader's pinned
                 # version are already reflected in the pinned shape —
                 # skipping them is what lets a RESTARTED stream (which
@@ -874,10 +847,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
                         # from-state snapshot (delete/compaction-heavy
                         # commits are exactly the expensive ones —
                         # review catch, r11).
-                        commit_bytes = sum(
-                            int(b.get("size", 0)) for b in adds
-                        ) + sum(
-                            int(getattr(prior_live.get(b["name"]), "size", 0))
+                        commit_bytes = sum(b.size for b in adds) + sum(
+                            int(getattr(prior_live.get(b.name), "size", 0))
                             for b in removes
                         )
                         if commit_bytes > self.max_bytes:
@@ -894,37 +865,32 @@ class EngineTableStreamReader(DataSourceStreamReader):
                                 stacklevel=2,
                             )
                     names = (
-                        [b["name"] for b in adds]
-                        + [b["name"] for b in removes]
-                        + [b["dv_name"] for b in dvs]
-                        + [o for b in dvs for o in b["objects"]]
+                        [b.name for b in adds]
+                        + [b.name for b in removes]
+                        + [b.dv_name for b in dvs]
+                        + [o for b in dvs for o in b.objects]
                     )
                     self._raise_on_vacuumed(store, v, names)
                     parts.append(
                         EngineCdfPartition(
                             version=v,
-                            ts_micros=int(record.get("ts", 0)),
-                            add_paths=[
-                                store.path_of(b["name"]) for b in adds
-                            ],
+                            ts_micros=record.ts or 0,
+                            add_paths=[store.path_of(b.name) for b in adds],
                             remove_paths=[
                                 (
-                                    store.path_of(b["name"]),
-                                    b["name"],
+                                    store.path_of(b.name),
+                                    b.name,
                                     [
                                         store.path_of(d)
-                                        for d in prior_dvs.get(b["name"], ())
+                                        for d in prior_dvs.get(b.name, ())
                                     ],
                                 )
                                 for b in removes
                             ],
                             dvs=[
                                 (
-                                    store.path_of(b["dv_name"]),
-                                    {
-                                        o: store.path_of(o)
-                                        for o in b["objects"]
-                                    },
+                                    store.path_of(b.dv_name),
+                                    {o: store.path_of(o) for o in b.objects},
                                 )
                                 for b in dvs
                             ],
@@ -948,9 +914,9 @@ class EngineTableStreamReader(DataSourceStreamReader):
             if adds:
                 # a replayed add may have been rewritten later and then
                 # VACUUMed — same planning-time guard as the change feed
-                self._raise_on_vacuumed(store, v, [b["name"] for b in adds])
-            for body in adds:
-                parts.append(self._part(store, body["name"]))
+                self._raise_on_vacuumed(store, v, [b.name for b in adds])
+            for add in adds:
+                parts.append(self._part(store, add.name))
         return parts
 
     # -- executor-side read ----------------------------------------------

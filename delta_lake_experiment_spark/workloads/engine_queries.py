@@ -1769,7 +1769,7 @@ def engine_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_experiment_spark.errors import HistoryTruncatedError
     from delta_lake_experiment_spark.plans.snapshot import (
         CHECKPOINT_PART_PREFIX,
-        LOG_PREFIX,
+        log_versions,
     )
 
     events = load_table(spark, sf_dir, "events").select(
@@ -1798,11 +1798,10 @@ def engine_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         deleted = c.vacuum_log(min_age_seconds=0)
         if deleted <= 0:
             raise RuntimeError("vacuum_log reclaimed nothing below the horizon")
-        logs = c.store.list_prefix_ordered(LOG_PREFIX)
-        if int(logs[0][len(LOG_PREFIX):]) != 16:
+        first = log_versions(c.store)[0]
+        if first != 16:
             raise RuntimeError(
-                f"expected the log to start at the v16 horizon, got"
-                f" {logs[0]}"
+                f"expected the log to start at the v16 horizon, got v{first}"
             )
         try:
             c.new_tx()
@@ -1874,8 +1873,8 @@ def engine_protocol_gating(spark: SparkSession, sf_dir: str) -> DataFrame:
         UnsupportedTableFeatureError,
     )
     from delta_lake_experiment_spark.plans.snapshot import (
-        LOG_PREFIX,
         Snapshot,
+        log_versions,
         replay_log,
     )
 
@@ -1932,7 +1931,7 @@ def engine_protocol_gating(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (4) masked WRITER reads but cannot commit; no record lands
     with protomod.masked_features(writer={"identityColumns"}):
         w = DeltaLakeClient(spark, c.store)
-        n_logs = len(w.store.list_prefix_ordered(LOG_PREFIX))
+        n_logs = len(log_versions(w.store))
         w.new_tx()
         if not w.scan("ev_prot", with_stamps=False).take(1):
             raise RuntimeError("masked writer could not even read")
@@ -1945,7 +1944,7 @@ def engine_protocol_gating(spark: SparkSession, sf_dir: str) -> DataFrame:
         except UnsupportedTableFeatureError as e:
             if e.kind != "writer":
                 raise RuntimeError(f"wrong writer gate payload: {e}")
-        if len(w.store.list_prefix_ordered(LOG_PREFIX)) != n_logs:
+        if len(log_versions(w.store)) != n_logs:
             raise RuntimeError("gated commit still published a record")
     # (5) future checkpoint format -> named error with the format number
     try:
@@ -2019,7 +2018,7 @@ def engine_drop_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from delta_lake_experiment_spark.functions.numeric import exact_sum
     from delta_lake_experiment_spark.plans.snapshot import (
-        LOG_PREFIX,
+        log_versions,
         replay_log,
     )
 
@@ -2108,7 +2107,7 @@ def engine_drop_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c.write_row("ev_victim", [1, "scaffold"])
     c.commit_tx()
-    n_logs = len(c.store.list_prefix_ordered(LOG_PREFIX))
+    n_logs = len(log_versions(c.store))
     c.new_tx()
     c.execute(
         "CREATE OR REPLACE TABLE ev_victim (event_id BIGINT, kind STRING)"
@@ -2120,7 +2119,7 @@ def engine_drop_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     c.commit_tx()
-    if len(c.store.list_prefix_ordered(LOG_PREFIX)) != n_logs + 1:
+    if len(log_versions(c.store)) != n_logs + 1:
         raise RuntimeError("REPLACE of a live table was not one commit")
     drops = c.list_dropped_tables()
     if [d["table"] for d in drops] != ["ev_victim", "ev_victim"]:
