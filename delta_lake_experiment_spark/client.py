@@ -110,7 +110,11 @@ from delta_lake_experiment_spark.plans.snapshot import (
     write_last_checkpoint,
     write_record,
 )
-from delta_lake_experiment_spark.storage.objectstore import LocalObjectStorage, ObjectStorage
+from delta_lake_experiment_spark.storage.objectstore import (
+    LocalObjectStorage,
+    LocalStagingArea,
+    ObjectStorage,
+)
 
 TX_COL = "_tx_id"
 # Names no user column may take or be renamed to: the engine's stamp
@@ -2284,7 +2288,7 @@ actions.DropTable` for why clearing the live set on fold is
         if not cluster:
             # declared hash layout: partition i holds exactly bucket-i
             # rows (repartition's HashPartitioning IS Spark's bucket id
-            # expression), and _register_staging labels each staged
+            # expression), and _stage_and_register labels each staged
             # file with its partition index. Bucketize AFTER the cast
             # to the table schema: murmur3 hashes int and bigint
             # differently, so hashing the caller's pre-coercion types
@@ -2300,16 +2304,6 @@ actions.DropTable` for why clearing the live set on fold is
             # per-partition cluster sort is preserved.
             stamped = self._enforce_checks(tx, table, stamped)
         stamped = self._to_physical(tx, table, stamped, snap)
-        begin_remote = getattr(self.store, "begin_remote_staging", None)
-        if begin_remote is not None:
-            # Remote stores (S3): executors write Parquet into in-bucket
-            # staging, the driver publishes via server-side copy — no
-            # data bytes ever transit the driver.
-            self._write_dataframe_remote(table, tx, stamped, base, begin_remote())
-            self._advance_identity(tx, table, ident_pending, base)
-            return
-        staging = self._staging_dir()
-        self._write_parquet_staging(stamped, staging)
         # Advance next_idx past the LARGEST stamp actually written (read
         # from the staged Parquet footers or the distributed stats pass,
         # never the data): a fixed stride would collide once
@@ -2318,58 +2312,9 @@ actions.DropTable` for why clearing the live set on fold is
         # breaking newest-first ordering for the next bulk write in the
         # same tx. The derived maxima are exact at ANY partition count,
         # including AQE skew-splits above the planned count.
-        try:
-            max_idx = self._register_staging(table, tx, staging)
-        finally:
-            _rmtree(staging)
+        max_idx = self._stage_and_register(table, tx, stamped)
         tx.next_idx[table] = (max_idx if max_idx is not None else base - 1) + 1
         self._advance_identity(tx, table, ident_pending, base)
-
-    def _write_dataframe_remote(
-        self, table: str, tx: _Tx, stamped: DataFrame, base: int, rs
-    ) -> None:
-        """Bulk ingest against a remote (S3-style) store: Spark writes
-        the stamped frame into the store's staging area (executor →
-        bucket, via the cluster's S3A connector), per-file stats/blooms
-        come from ONE distributed aggregation over the staged files, and
-        each file is published with a server-side copy. The only driver
-        traffic is metadata: key names, footer-sized stats rows, bloom
-        bitsets."""
-        self._write_parquet_staging(stamped, rs.uri)
-        try:
-            staged = rs.list_staged()
-            if not staged:
-                return
-            sizes = getattr(rs, "staged_sizes", dict)() or {}
-            stats_by_file, blooms_by_file, max_idx = self._staged_stats_distributed(
-                table, tx, rs.uri
-            )
-            bucketed = self._bucket_spec(tx, table) is not None
-            for skey in staged:
-                fname = skey.rsplit("/", 1)[-1]
-                st = stats_by_file.get(fname)
-                if st is None or st["num_rows"] == 0:
-                    continue  # empty partition file — never logged
-                dest = f"table_{table}_{uuid.uuid4().hex}.parquet"
-                rs.publish(skey, dest)
-                tx.actions.append(
-                    AddDataObject(
-                        name=dest,
-                        table=table,
-                        tx_id=tx.id,
-                        num_rows=st["num_rows"],
-                        size=int(sizes.get(skey, 0)),
-                        stats=st["stats"],
-                        blooms=self._maybe_sidecar_blooms(
-                            blooms_by_file.get(fname, {})
-                        ),
-                        bucket_id=_staged_bucket_id(fname) if bucketed else None,
-                    )
-                )
-            if max_idx is not None:
-                tx.next_idx[table] = max_idx + 1
-        finally:
-            rs.discard()
 
     def _staged_stats_distributed(
         self, table: str, tx: _Tx, uri: str
@@ -3111,7 +3056,7 @@ actions.DropTable` for why clearing the live set on fold is
             else self.spark.createDataFrame([], stored)
         )
         # metadata reset FIRST: the staged write (and its stats/blooms)
-        # must land under logical names, which _register_staging reads
+        # must land under logical names, which _stage_and_register reads
         # from the tx-effective snapshot
         tx.actions.append(
             self._authoritative_metadata(
@@ -3133,13 +3078,8 @@ actions.DropTable` for why clearing the live set on fold is
             )
         else:
             df = df.coalesce(max(1, len(files)))
-        staging = self._staging_dir()
         # no _to_physical: physical == logical from this commit on
-        self._write_parquet_staging(df, staging)
-        try:
-            self._register_staging(table, tx, staging, rewrite=True)
-        finally:
-            _rmtree(staging)
+        self._stage_and_register(table, tx, df, rewrite=True)
         for o in objs:
             tx.actions.append(RemoveDataObject(name=o.name, table=table, tx_id=tx.id))
         return len(objs)
@@ -3977,15 +3917,12 @@ actions.DropTable` for why clearing the live set on fold is
             [self.store.path_of(n) for n in sorted(affected_names)],
             record=True,
         ).filter(~pred | F.col(column).isNull())
-        staging = self._staging_dir()
-        self._write_parquet_staging(
+        self._stage_and_register(
+            table,
+            tx,
             self._to_physical(tx, table, self._bucketize(tx, table, survivors), snap),
-            staging,
+            rewrite=True,
         )
-        try:
-            self._register_staging(table, tx, staging, rewrite=True)
-        finally:
-            _rmtree(staging)
         for name in sorted(affected_names):
             tx.actions.append(RemoveDataObject(name=name, table=table, tx_id=tx.id))
 
@@ -4310,24 +4247,20 @@ actions.DropTable` for why clearing the live set on fold is
                 .cast(schema[gcol].dataType),
             )
         updated = updated.drop("__upd")
-        staging = self._staging_dir()
-        self._write_parquet_staging(
+        # NOT rewrite-tagged (review catch, r10): UPDATE modifies
+        # values, so its output can move rows INTO a concurrent
+        # reader's recorded scope (SET k=50 vs a reader that
+        # observed "no rows in [40,60]") — a rw exemption here
+        # would re-admit the write-skew class this lane exists to
+        # catch. Delta treats UPDATE AddFiles as dataChange=true
+        # conflict candidates for the same reason; updates whose
+        # output stats are disjoint from every recorded scope
+        # still admit through the stats test.
+        self._stage_and_register(
+            table,
+            tx,
             self._to_physical(tx, table, self._bucketize(tx, table, updated), snap),
-            staging,
         )
-        try:
-            # NOT rewrite-tagged (review catch, r10): UPDATE modifies
-            # values, so its output can move rows INTO a concurrent
-            # reader's recorded scope (SET k=50 vs a reader that
-            # observed "no rows in [40,60]") — a rw exemption here
-            # would re-admit the write-skew class this lane exists to
-            # catch. Delta treats UPDATE AddFiles as dataChange=true
-            # conflict candidates for the same reason; updates whose
-            # output stats are disjoint from every recorded scope
-            # still admit through the stats test.
-            self._register_staging(table, tx, staging)
-        finally:
-            _rmtree(staging)
         for name in sorted(affected_names):
             tx.actions.append(RemoveDataObject(name=name, table=table, tx_id=tx.id))
 
@@ -4354,24 +4287,24 @@ actions.DropTable` for why clearing the live set on fold is
 
     def _write_dv(self, tx: "_Tx", table: str, matches: DataFrame) -> int:
         """Publish an (obj, row_idx) mask DataFrame as a deletion-vector
-        object + log action. Returns rows masked (0 = no-op)."""
-        staging = self._staging_dir()
-        try:
-            self._write_parquet_staging(matches.coalesce(1), staging)
-            part = next(
-                (f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")), None
-            )
-            if part is None:
-                return 0
-            import pyarrow.parquet as pq
+        object + log action. Returns rows masked (0 = no-op).
 
-            src = os.path.join(staging, part)
-            dv_tbl = pq.read_table(src, columns=["obj"])
+        The mask is published from the staging area like any other
+        Spark-written object, then its ``obj`` column is read back
+        through the store; an empty mask is deleted again, unlogged."""
+        area = self.store.begin_staging()
+        try:
+            self._write_parquet_staging(matches.coalesce(1), area.uri)
+            staged = area.list_staged()
+            if not staged:
+                return 0
+            dv_name = f"dv_{table}_{uuid.uuid4().hex}.parquet"
+            area.publish(staged[0], dv_name)
+            dv_tbl = self._read_store_parquet(dv_name, columns=["obj"])
             if dv_tbl.num_rows == 0:
+                self.store.delete(dv_name)
                 return 0
             objects = sorted(set(dv_tbl["obj"].to_pylist()))
-            dv_name = f"dv_{table}_{uuid.uuid4().hex}.parquet"
-            self.store.put_file_if_absent(dv_name, src)
             tx.actions.append(
                 AddDeletionVector(
                     table=table,
@@ -4383,7 +4316,7 @@ actions.DropTable` for why clearing the live set on fold is
             )
             return dv_tbl.num_rows
         finally:
-            _rmtree(staging)
+            area.discard()
 
     def _arrow_bound(self, pa_type, bound: Any) -> Any:
         """Align a Python datetime bound with an Arrow column's timestamp
@@ -4640,12 +4573,9 @@ actions.DropTable` for why clearing the live set on fold is
             df = self._bucketize(tx, table, df)
         else:
             df = df.coalesce(target_files)
-        staging = self._staging_dir()
-        self._write_parquet_staging(self._to_physical(tx, table, df, snap), staging)
-        try:
-            self._register_staging(table, tx, staging, rewrite=True)
-        finally:
-            _rmtree(staging)
+        self._stage_and_register(
+            table, tx, self._to_physical(tx, table, df, snap), rewrite=True
+        )
         for o in objs:
             tx.actions.append(RemoveDataObject(name=o.name, table=table, tx_id=tx.id))
 
@@ -4847,15 +4777,12 @@ actions.DropTable` for why clearing the live set on fold is
         survivors = self._read_live(
             table, snap, stored, [self.store.path_of(n) for n in heavy]
         )
-        staging = self._staging_dir()
-        self._write_parquet_staging(
+        self._stage_and_register(
+            table,
+            tx,
             self._to_physical(tx, table, self._bucketize(tx, table, survivors), snap),
-            staging,
+            rewrite=True,
         )
-        try:
-            self._register_staging(table, tx, staging, rewrite=True)
-        finally:
-            _rmtree(staging)
         for name in heavy:
             tx.actions.append(RemoveDataObject(name=name, table=table, tx_id=tx.id))
         return len(heavy)
@@ -5579,15 +5506,11 @@ actions.DropTable` for why clearing the live set on fold is
                         F.expr(gexpr).cast(stored[gcol].dataType),
                     ),
                 )
-            staging = self._staging_dir()
-            self._write_parquet_staging(
+            self._stage_and_register(
+                table,
+                tx,
                 self._to_physical(tx, table, self._bucketize(tx, table, stamped), snap),
-                staging,
             )
-            try:
-                self._register_staging(table, tx, staging)
-            finally:
-                _rmtree(staging)
             return
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -6092,48 +6015,75 @@ actions.DropTable` for why clearing the live set on fold is
                 out[col] = b
         return out
 
-    def _register_staging(
-        self, table: str, tx: _Tx, staging: str, rewrite: bool = False
+    def _stage_and_register(
+        self, table: str, tx: _Tx, df: DataFrame, rewrite: bool = False
     ) -> Optional[int]:
-        """Register every staged Parquet file as a data object; returns
-        the max ``_row_idx`` stamp among them (None if nothing staged).
+        """Write ``df`` into a fresh store staging area and register
+        every staged Parquet file as a data object — the one path every
+        executor-written object takes (bulk ingest, COW rewrites,
+        OPTIMIZE, UPDATE, DV materialization, bucketed/checked flushes).
+        Returns the max ``_row_idx`` stamp among the staged files (None
+        if nothing was staged).
 
-        When the table declares bloom columns, per-file stats, blooms
-        and the max stamp all come from ONE distributed aggregation
-        over the staged directory (``_staged_stats_distributed`` is
-        store-agnostic — staged files are Spark-readable locally too),
-        so ingest never reads data columns through the driver: at 100×
-        ingest the driver handles only footer-sized stats rows and
-        bloom bitsets. Without blooms, the per-file footer pass is
-        metadata-only and avoids Spark-job latency for small flushes.
-        """
-        files = [f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")]
-        if not files:
-            return None
-        bucketed = self._bucket_spec(tx, table) is not None
-        if self._effective_snapshot(tx).bloom_cols.get(table) or tx.ident_probe.get(
-            table
-        ):
-            # the identity mint probe needs row-level data (footer
-            # stats can't separate minted from supplied cells), so a
-            # probed write takes the distributed pass even bloom-less
-            stats_by_file, blooms_by_file, max_idx = self._staged_stats_distributed(
-                table, tx, staging
-            )
-            for fname in files:
+        Per-file stats come from one of two passes:
+
+        - footer pass (``_parquet_file_stats``/``_parquet_idx_max``):
+          metadata-only, no Spark job — taken when the driver can open
+          the staged files (local store), the table declares no bloom
+          columns and no identity mint probe is pending;
+        - distributed pass (``_staged_stats_distributed``): ONE
+          aggregation over the staged directory yields stats, blooms
+          and the max stamp, so the driver handles only footer-sized
+          stats rows and bloom bitsets — never data columns. Blooms and
+          the identity probe need row-level data; a remote area has no
+          driver-readable files.
+
+        Each non-empty file is then published by the area (hard link
+        locally, server-side copy on S3): no data bytes through the
+        driver on any backend."""
+        area = self.store.begin_staging()
+        try:
+            self._write_parquet_staging(df, area.uri)
+            staged = area.list_staged()
+            if not staged:
+                return None
+            sizes = area.staged_sizes()
+            if (
+                isinstance(area, LocalStagingArea)
+                and not self._effective_snapshot(tx).bloom_cols.get(table)
+                and not tx.ident_probe.get(table)
+            ):
+                stats_by_file: dict[str, dict] = {}
+                blooms_by_file: dict[str, dict] = {}
+                max_idx: Optional[int] = None
+                for path in staged:
+                    num_rows, stats = _parquet_file_stats(path)
+                    stats_by_file[os.path.basename(path)] = {
+                        "num_rows": num_rows,
+                        "stats": stats,
+                    }
+                    hi = _parquet_idx_max(path)
+                    if hi is not None:
+                        max_idx = hi if max_idx is None else max(max_idx, hi)
+            else:
+                stats_by_file, blooms_by_file, max_idx = (
+                    self._staged_stats_distributed(table, tx, area.uri)
+                )
+            bucketed = self._bucket_spec(tx, table) is not None
+            for skey in staged:
+                fname = skey.rsplit("/", 1)[-1]
                 st = stats_by_file.get(fname)
                 if st is None or st["num_rows"] == 0:
                     continue  # empty partition file — never logged
                 name = f"table_{table}_{uuid.uuid4().hex}.parquet"
-                src = os.path.join(staging, fname)
-                self.store.put_file_if_absent(name, src)
+                area.publish(skey, name)
                 tx.actions.append(
                     AddDataObject(
                         name=name,
                         table=table,
                         tx_id=tx.id,
                         num_rows=st["num_rows"],
-                        size=os.path.getsize(src),
+                        size=int(sizes.get(skey, 0)),
                         stats=st["stats"],
                         blooms=self._maybe_sidecar_blooms(
                             blooms_by_file.get(fname, {})
@@ -6143,18 +6093,8 @@ actions.DropTable` for why clearing the live set on fold is
                     )
                 )
             return max_idx
-        max_idx: Optional[int] = None
-        for fname in files:
-            path = os.path.join(staging, fname)
-            hi = _parquet_idx_max(path)
-            if hi is not None:
-                max_idx = hi if max_idx is None else max(max_idx, hi)
-            self._register_object(
-                table, tx, path,
-                bucket_id=_staged_bucket_id(fname) if bucketed else None,
-                rewrite=rewrite,
-            )
-        return max_idx
+        finally:
+            area.discard()
 
     def _register_object(
         self,
@@ -6194,11 +6134,10 @@ actions.DropTable` for why clearing the live set on fold is
     def _build_blooms(self, table: str, tx: _Tx, src_path: str) -> dict[str, dict]:
         """Per-file blooms for the table's declared bloom columns.
 
-        Reads ONLY the declared columns from the (local staging) file —
+        Reads ONLY the declared columns from the driver-written file —
         the same driver-side footer pass that already produces min/max
-        stats, extended by one column read. Registration paths all
-        funnel here, so flush, bulk ingest, COW rewrites and compaction
-        keep blooms consistent automatically."""
+        stats, extended by one column read. Spark-staged files get
+        their blooms from ``_staged_stats_distributed`` instead."""
         snap = self._effective_snapshot(tx)
         cols = snap.bloom_cols.get(table)
         if not cols:
@@ -6238,6 +6177,9 @@ actions.DropTable` for why clearing the live set on fold is
         )
 
     def _staging_dir(self) -> str:
+        """Driver-local directory for the files the driver itself writes
+        with pyarrow (plain row-buffer flush, driver-side COW delete);
+        Spark writes stage through :meth:`_stage_and_register`."""
         root = getattr(self.store, "root", None) or os.path.join("/tmp", "dles_staging")
         d = os.path.join(root, ".tmp", f"staging_{uuid.uuid4().hex}")
         os.makedirs(d, exist_ok=True)
@@ -6344,14 +6286,12 @@ _DDL_FIELD_RE = re.compile(
 )
 
 
-def _parse_ddl_local(ddl: str) -> Optional[T.StructType]:
-    """Parse flat 'name TYPE, ...' DDL (primitives + decimal(p,s) +
-    array<primitive>) without a SparkSession. Returns None for
-    anything outside that grammar (nested structs, maps, NOT NULL,
-    comments) — the caller then uses Spark's parser."""
-    fields = []
+def _split_ddl(ddl: str) -> list[str]:
+    """Top-level fields of flat 'name TYPE, ...' DDL, stripped: commas
+    inside ``<...>``/``(...)`` (array element types, decimal(p,s)) do
+    not split. Spark-free; the streaming source splits with it too."""
     depth = 0
-    part = []
+    part: list[str] = []
     parts: list[str] = []
     for ch in ddl:
         if ch in "<(":
@@ -6359,13 +6299,21 @@ def _parse_ddl_local(ddl: str) -> Optional[T.StructType]:
         elif ch in ">)":
             depth -= 1
         if ch == "," and depth == 0:
-            parts.append("".join(part))
+            parts.append("".join(part).strip())
             part = []
         else:
             part.append(ch)
-    parts.append("".join(part))
-    for p in parts:
-        p = p.strip()
+    parts.append("".join(part).strip())
+    return parts
+
+
+def _parse_ddl_local(ddl: str) -> Optional[T.StructType]:
+    """Parse flat 'name TYPE, ...' DDL (primitives + decimal(p,s) +
+    array<primitive>) without a SparkSession. Returns None for
+    anything outside that grammar (nested structs, maps, NOT NULL,
+    comments) — the caller then uses Spark's parser."""
+    fields = []
+    for p in _split_ddl(ddl):
         if not p:
             return None
         arr = re.match(

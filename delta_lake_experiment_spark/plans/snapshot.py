@@ -293,19 +293,12 @@ def _parts_to_live(store: ObjectStorage, parts: list[str]) -> dict:
     for part in parts:
         tbl = pq.read_table(pa.BufferReader(store.read(part)))
         for r in tbl.to_pylist():
-            live.setdefault(r["table"], {})[r["name"]] = AddDataObject(
-                name=r["name"],
-                table=r["table"],
-                tx_id=int(r["tx_id"]),
-                num_rows=int(r["num_rows"]),
-                size=int(r["size"]),
-                stats=json.loads(r["stats"]),
-                blooms=json.loads(r["blooms"]),
-                bucket_id=(
-                    int(r["bucket_id"]) if r["bucket_id"] is not None else None
-                ),
-                rewrite=bool(r["rw"]),
-            )
+            # a sidecar row is an add body whose stats/blooms columns
+            # hold JSON strings
+            r["stats"] = json.loads(r["stats"])
+            r["blooms"] = json.loads(r["blooms"])
+            add = add_from_json(r)
+            live.setdefault(add.table, {})[add.name] = add
     return live
 
 

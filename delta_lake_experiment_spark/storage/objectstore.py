@@ -60,8 +60,47 @@ class BucketScanArea(ABC):
         """Remove the area and everything linked into it."""
 
 
+class StagingArea(ABC):
+    """One Spark write's staging namespace.
+
+    Every executor-written object (bulk ingest, COW rewrites, OPTIMIZE,
+    UPDATE, deletion-vector masks) goes through the same lifecycle:
+    Spark writes Parquet to ``uri`` → :meth:`list_staged` names the
+    staged parquet files → :meth:`publish` moves one of them to a final
+    object name → :meth:`discard` removes whatever remains. The area
+    lives beside the store's objects, so publishing never moves data
+    bytes through the driver:
+
+    - local FS: a directory under ``<root>/.tmp`` (publish = hard link);
+    - S3: a key prefix under ``<prefix>.tmp/`` (publish = server-side
+      ``CopyObject``)."""
+
+    uri: str
+
+    @abstractmethod
+    def list_staged(self) -> list[str]:
+        """Staged parquet files (ascending; excludes ``_SUCCESS`` etc.)
+        as handles :meth:`publish` and :meth:`staged_sizes` accept."""
+
+    @abstractmethod
+    def staged_sizes(self) -> dict[str, int]:
+        """Staged handle -> byte size."""
+
+    @abstractmethod
+    def publish(self, staged: str, dest_name: str) -> None:
+        """Expose staged file ``staged`` as store object ``dest_name``."""
+
+    @abstractmethod
+    def discard(self) -> None:
+        """Remove the area and every staged file left in it."""
+
+
 class ObjectStorage(ABC):
     """Minimal storage interface; see module docstring."""
+
+    @abstractmethod
+    def begin_staging(self) -> StagingArea:
+        """Open a :class:`StagingArea` for one Spark write."""
 
     def begin_bucket_scan_area(self) -> Optional[BucketScanArea]:
         """Open a :class:`BucketScanArea`, or None when the backend
@@ -182,6 +221,9 @@ class MemoryObjectStorage(ObjectStorage):
     def path_of(self, name: str) -> str:
         raise NotImplementedError("MemoryObjectStorage holds no Spark-readable paths")
 
+    def begin_staging(self) -> StagingArea:
+        raise NotImplementedError("MemoryObjectStorage holds no Spark-readable paths")
+
     def exists(self, name: str) -> bool:
         return name in self._objects
 
@@ -283,6 +325,9 @@ class LocalObjectStorage(ObjectStorage):
     def begin_bucket_scan_area(self) -> Optional[BucketScanArea]:
         return LocalBucketScanArea(self)
 
+    def begin_staging(self) -> "LocalStagingArea":
+        return LocalStagingArea(self)
+
     def put_file_if_absent(self, name: str, src_path: str) -> None:
         """Zero-copy ingest: fsync the staged file, then hard-link it to
         the final name — the same atomic EEXIST gate as put_if_absent,
@@ -323,4 +368,33 @@ class LocalBucketScanArea(BucketScanArea):
         os.link(self.store.path_of(src_name), os.path.join(self.dir, filename))
 
     def drop(self) -> None:
+        shutil.rmtree(self.dir, ignore_errors=True)
+
+
+class LocalStagingArea(StagingArea):
+    """Staging area on local FS: ``<root>/.tmp/staging_<uuid>``. Same
+    filesystem as the store, so :meth:`publish` is
+    ``put_file_if_absent``'s hard link; staged handles are file paths
+    the driver can open directly (``dir``)."""
+
+    def __init__(self, store: LocalObjectStorage) -> None:
+        self.store = store
+        self.dir = os.path.join(store._tmpdir, f"staging_{uuid.uuid4().hex}")
+        os.makedirs(self.dir)
+        self.uri = self.dir
+
+    def list_staged(self) -> list[str]:
+        return sorted(
+            os.path.join(self.dir, f)
+            for f in os.listdir(self.dir)
+            if f.endswith(".parquet")
+        )
+
+    def staged_sizes(self) -> dict[str, int]:
+        return {p: os.path.getsize(p) for p in self.list_staged()}
+
+    def publish(self, staged: str, dest_name: str) -> None:
+        self.store.put_file_if_absent(dest_name, staged)
+
+    def discard(self) -> None:
         shutil.rmtree(self.dir, ignore_errors=True)

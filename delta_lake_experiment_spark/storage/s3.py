@@ -20,11 +20,14 @@ holds in memory).
 
 Spark integration: ``path_of`` returns ``s3a://bucket/prefix/name`` so
 executors read Parquet objects straight from S3 through the Hadoop S3A
-connector — the driver never proxies data bytes, same as the local
-backend. (The S3A jars ship with real clusters; this container has no
-S3 endpoint, so the class is exercised against an injected fake client
-in tests — the metadata layer, OCC semantics included, is storage-API
-complete either way.)
+connector, and every Spark write (bulk ingest, COW rewrites, OPTIMIZE,
+UPDATE, deletion-vector masks) stages in the bucket and publishes with
+a server-side copy (:meth:`S3ObjectStorage.begin_staging`). Only the
+row-buffer flush and small driver-side COW deletes, whose files the
+driver itself writes, PUT data bytes from the driver. (The S3A jars
+ship with real clusters; the tests have no S3 endpoint, so the class is
+exercised against an injected fake client there — the metadata layer,
+OCC semantics included, is storage-API complete either way.)
 
 boto3 is not installed in this container; the import is deferred and a
 pre-built client (real boto3, or a test double implementing
@@ -40,6 +43,7 @@ from delta_lake_experiment_spark.errors import ObjectExistsError
 from delta_lake_experiment_spark.storage.objectstore import (
     BucketScanArea,
     ObjectStorage,
+    StagingArea,
 )
 
 # HTTP statuses S3 returns for a failed conditional PUT.
@@ -111,19 +115,19 @@ class S3ObjectStorage(ObjectStorage):
         )
 
     def put_file_if_absent(self, name: str, src_path: str) -> None:
-        # Single-request conditional upload of a DRIVER-local file (the
-        # row-buffer flush path). Bulk ingest never comes through here:
-        # executors write straight to S3 staging and the driver
-        # publishes via server-side copy_object — see
-        # :meth:`begin_remote_staging`.
+        # Single-request conditional upload of a file the DRIVER wrote
+        # (the row-buffer flush and small driver-side COW deletes).
+        # Spark-written objects never come through here: executors
+        # write straight to S3 staging and the driver publishes via
+        # server-side copy_object — see :meth:`begin_staging`.
         with open(src_path, "rb") as f:
             self.put_if_absent(name, f.read())
 
     # ------------------------------------------------------------------
-    # executor-direct staging (bulk ingest without driver data bytes)
+    # executor-direct staging (Spark writes without driver data bytes)
     # ------------------------------------------------------------------
 
-    def begin_remote_staging(self) -> "S3RemoteStaging":
+    def begin_staging(self) -> "S3RemoteStaging":
         """Open a staging area INSIDE the bucket: executors write
         Parquet to ``uri`` through the S3A connector, the driver then
         publishes each staged file with a server-side ``copy_object``
@@ -158,29 +162,42 @@ class S3ObjectStorage(ObjectStorage):
     def list_prefix_ordered(
         self, prefix: str, start_after: Optional[str] = None
     ) -> list[str]:
-        names: list[str] = []
+        # native server-side anchor: the response starts past
+        # start_after, so a checkpoint-anchored log listing costs
+        # O(tail) pages instead of O(total commits)
+        listed = self._list_keys(
+            self._key(prefix),
+            None if start_after is None else self._key(start_after),
+        )
+        names = [key[len(self.prefix):] for key, _ in listed]
+        names.sort()  # S3 lists ascending already; defensive for doubles
+        return names
+
+    def _list_keys(
+        self, key_prefix: str, start_after: Optional[str] = None
+    ) -> list[tuple[str, int]]:
+        """(full key, size) of every key under ``key_prefix``, past the
+        ``start_after`` key when given — the one ListObjectsV2
+        pagination loop. It returns only after the LAST page: callers
+        that delete what they list must list fully first, because
+        deleting mid-pagination shifts continuation cursors (both on
+        real S3 and the test double) and skips keys."""
+        out: list[tuple[str, int]] = []
         token: Optional[str] = None
         while True:
-            kwargs: dict[str, Any] = {
-                "Bucket": self.bucket,
-                "Prefix": self._key(prefix),
-            }
+            kwargs: dict[str, Any] = {"Bucket": self.bucket, "Prefix": key_prefix}
             if start_after is not None:
-                # native server-side anchor: the response starts past
-                # this key, so a checkpoint-anchored log listing costs
-                # O(tail) pages instead of O(total commits)
-                kwargs["StartAfter"] = self._key(start_after)
+                kwargs["StartAfter"] = start_after
             if token:
                 kwargs["ContinuationToken"] = token
             resp = self.client.list_objects_v2(**kwargs)
-            names.extend(
-                obj["Key"][len(self.prefix):] for obj in resp.get("Contents", [])
+            out.extend(
+                (obj["Key"], int(obj.get("Size", 0)))
+                for obj in resp.get("Contents", [])
             )
             if not resp.get("IsTruncated"):
-                break
+                return out
             token = resp.get("NextContinuationToken")
-        names.sort()  # S3 lists ascending already; defensive for doubles
-        return names
 
     def read(self, name: str) -> bytes:
         resp = self.client.get_object(Bucket=self.bucket, Key=self._key(name))
@@ -226,14 +243,14 @@ class S3ObjectStorage(ObjectStorage):
         return self.prefix + name
 
 
-class S3RemoteStaging:
+class S3RemoteStaging(StagingArea):
     """One staging area under ``<prefix>/.tmp/staging_<token>/``.
 
     Lifecycle: Spark writes Parquet to :attr:`uri` (executors talk to
     S3 directly via S3A) → :meth:`list_staged` names the staged parquet
     keys → :meth:`publish` server-side-copies one staged key to a final
-    data-object key → :meth:`discard` deletes whatever staging keys
-    remain. The driver only ever moves object *names*, never bytes.
+    object key → :meth:`discard` deletes whatever staging keys remain.
+    The driver only ever moves object *names*, never bytes.
     """
 
     def __init__(self, store: S3ObjectStorage) -> None:
@@ -253,26 +270,15 @@ class S3RemoteStaging:
         already carries sizes — no extra HEAD round-trips; cached so
         list_staged + staged_sizes cost ONE listing per ingest, the
         staging prefix being write-complete before either is called).
-        Powers the per-object ``size`` stat on remote bulk ingest."""
+        Powers the per-object ``size`` stat of every staged write."""
         cached = getattr(self, "_sizes_cache", None)
         if cached is not None:
             return cached
-        sizes: dict = {}
-        token: Optional[str] = None
-        while True:
-            kwargs: dict[str, Any] = {
-                "Bucket": self.store.bucket,
-                "Prefix": self.key_prefix,
-            }
-            if token:
-                kwargs["ContinuationToken"] = token
-            resp = self.store.client.list_objects_v2(**kwargs)
-            for obj in resp.get("Contents", []):
-                if obj["Key"].endswith(".parquet"):
-                    sizes[obj["Key"]] = int(obj.get("Size", 0))
-            if not resp.get("IsTruncated"):
-                break
-            token = resp.get("NextContinuationToken")
+        sizes = {
+            key: size
+            for key, size in self.store._list_keys(self.key_prefix)
+            if key.endswith(".parquet")
+        }
         self._sizes_cache = sizes
         return sizes
 
@@ -284,26 +290,8 @@ class S3RemoteStaging:
         )
 
     def discard(self) -> None:
-        for key in self._all_keys():
+        for key, _ in self.store._list_keys(self.key_prefix):
             self.store.client.delete_object(Bucket=self.store.bucket, Key=key)
-
-    def _all_keys(self) -> list[str]:
-        keys: list[str] = []
-        token: Optional[str] = None
-        while True:
-            kwargs: dict[str, Any] = {
-                "Bucket": self.store.bucket,
-                "Prefix": self.key_prefix,
-            }
-            if token:
-                kwargs["ContinuationToken"] = token
-            resp = self.store.client.list_objects_v2(**kwargs)
-            keys.extend(obj["Key"] for obj in resp.get("Contents", []))
-            if not resp.get("IsTruncated"):
-                break
-            token = resp.get("NextContinuationToken")
-        keys.sort()
-        return keys
 
 
 class S3BucketScanArea(BucketScanArea):
@@ -335,23 +323,7 @@ class S3BucketScanArea(BucketScanArea):
         )
 
     def drop(self) -> None:
-        # list fully FIRST: deleting mid-pagination shifts continuation
-        # cursors (both on real S3 and the test double) and skips keys
-        keys: list[str] = []
-        token: Optional[str] = None
-        while True:
-            kwargs: dict[str, Any] = {
-                "Bucket": self.store.bucket,
-                "Prefix": self.key_prefix,
-            }
-            if token:
-                kwargs["ContinuationToken"] = token
-            resp = self.store.client.list_objects_v2(**kwargs)
-            keys.extend(obj["Key"] for obj in resp.get("Contents", []))
-            if not resp.get("IsTruncated"):
-                break
-            token = resp.get("NextContinuationToken")
-        for key in keys:
+        for key, _ in self.store._list_keys(self.key_prefix):
             self.store.client.delete_object(Bucket=self.store.bucket, Key=key)
 
 

@@ -212,29 +212,6 @@ def _arrow_type(ddl: str):
     raise TypeError(f"engine_table source: unsupported column type {ddl!r}")
 
 
-def _split_ddl(ddl: str) -> list[tuple[str, str]]:
-    """Flat 'name TYPE, ...' DDL -> [(name, type_str)] — same grammar
-    the engine stores (client.py _parse_ddl_local), no SparkSession."""
-    out = []
-    depth, part, parts = 0, [], []
-    for ch in ddl:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(part))
-            part = []
-        else:
-            part.append(ch)
-    parts.append("".join(part))
-    for p in parts:
-        p = p.strip()
-        name, _, typ = p.partition(" ")
-        out.append((name.strip("`"), typ.strip()))
-    return out
-
-
 @dataclass
 class EngineFilePartition(InputPartition):
     """One committed data object: everything an executor needs to read
@@ -377,10 +354,15 @@ class EngineTableStreamReader(DataSourceStreamReader):
         self.pinned_version = snap.version
         self._ddl = snap.tables[self.table]
         cmap = snap.col_maps.get(self.table, {})
-        self._columns = [
-            (name, cmap.get(name, name), typ)
-            for name, typ in _split_ddl(self._ddl)
-        ]
+        # planning-side only: the executor read path never builds a
+        # reader, so it need not import the client module
+        from delta_lake_experiment_spark.client import _split_ddl
+
+        self._columns = []
+        for field_ddl in _split_ddl(self._ddl):
+            name, _, typ = field_ddl.partition(" ")
+            name = name.strip("`")
+            self._columns.append((name, cmap.get(name, name), typ.strip()))
         self._defaults = {
             c: {"v": d["v"], "birth": int(d["birth"])}
             for c, d in snap.defaults.get(self.table, {}).items()

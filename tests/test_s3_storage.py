@@ -166,7 +166,7 @@ class _LocalSyncedStaging:
 
 
 class _TestS3Storage(S3ObjectStorage):
-    def begin_remote_staging(self):
+    def begin_staging(self):
         import tempfile
 
         return _LocalSyncedStaging(self, tempfile.mkdtemp(prefix="fake_s3_staging_"))
