@@ -73,6 +73,7 @@ from delta_lake_experiment_spark.errors import (
     TableNotFoundError,
     TypeMismatchError,
 )
+from delta_lake_experiment_spark.plans import deletion_vectors as dvfile
 from delta_lake_experiment_spark.plans.actions import (
     Action,
     AddDataObject,
@@ -104,6 +105,7 @@ from delta_lake_experiment_spark.plans.snapshot import (
     log_versions,
     newest_checkpoint_version,
     read_record,
+    reclaim_checkpoint_parts,
     reclaim_log,
     replay_log,
     ts_bisect,
@@ -1266,16 +1268,14 @@ actions.DropTable` for why clearing the live set on fold is
         :meth:`list_dropped_tables`'s ``verify_bytes`` so the two can
         never disagree about what 'the bytes' means."""
         old_objs = old.live_map(table)
-        dv_names = {
-            d for dvl in old.table_dvs(table).values() for d in dvl
-        }
+        old_dvs = old.table_dvs(table)
         bloom_refs = {
             b["ref"]
             for add in old_objs.values()
             for b in add.blooms.values()
             if isinstance(b, dict) and "ref" in b
         }
-        return set(old_objs) | dv_names | bloom_refs
+        return set(old_objs) | set(dvfile.covering(old_dvs, old_dvs)) | bloom_refs
 
     def _probe_reclaimed(
         self, expected: set[str]
@@ -2690,15 +2690,7 @@ actions.DropTable` for why clearing the live set on fold is
         )
         self._bucket_scans[table] = (cat_name, area)
         df = self.spark.table(cat_name)
-        live_names = {o.name for o in objs}
-        dv_names = sorted(
-            {
-                dv
-                for obj, dv_list in snap.table_dvs(table).items()
-                if obj in live_names
-                for dv in dv_list
-            }
-        )
+        dv_names = dvfile.covering(snap.table_dvs(table), [o.name for o in objs])
         if dv_names:
             # join key = the object's uuid4 HEX id, extracted from BOTH
             # sides (globally unique across tables). Reconstructing the
@@ -2712,27 +2704,14 @@ actions.DropTable` for why clearing the live set on fold is
                 r"part-\d+-([0-9a-f]+)_\d+\.c000\.parquet",
                 1,
             )
-            dv_df = (
-                self.spark.read.parquet(*[self.store.path_of(x) for x in dv_names])
-                .select(
-                    F.regexp_extract(
-                        F.col("obj"), r"_([0-9a-f]+)\.parquet$", 1
-                    ).alias("__dv_obj"),
-                    F.col("row_idx").alias("__dv_ridx"),
-                )
-            )
-            df = (
+            df = dvfile.join_mask(
                 df.withColumns(
                     {"__obj": obj_name, "__ridx": F.col("_metadata.row_index")}
-                )
-                .join(
-                    F.broadcast(dv_df),
-                    (F.col("__obj") == F.col("__dv_obj"))
-                    & (F.col("__ridx") == F.col("__dv_ridx")),
-                    "left_anti",
-                )
-                .drop("__obj", "__ridx")
-            )
+                ),
+                self.store,
+                dv_names,
+                key=lambda c: F.regexp_extract(c, r"_([0-9a-f]+)\.parquet$", 1),
+            ).drop("__obj", "__ridx")
         if pmap:
             # logical aliasing LAST: the `_metadata` captures above only
             # resolve on the scan relation
@@ -3453,29 +3432,19 @@ actions.DropTable` for why clearing the live set on fold is
         # newly-masked positions on files live at both versions
         from_dvs = from_snap.table_dvs(table)
         to_dvs = to_snap.table_dvs(table)
-        masked_objs = {
-            o
+        new_dvs = {
+            o: set(to_dvs.get(o, [])) - set(from_dvs.get(o, []))
             for o in common
-            if set(to_dvs.get(o, [])) - set(from_dvs.get(o, []))
         }
+        masked_objs = sorted(o for o, d in new_dvs.items() if d)
         if masked_objs:
-            dv_names = sorted(
-                {
-                    dv
-                    for o in masked_objs
-                    for dv in set(to_dvs.get(o, [])) - set(from_dvs.get(o, []))
-                }
-            )
-            mask = (
-                self.spark.read.parquet(*[self.store.path_of(n) for n in dv_names])
-                .filter(F.col("obj").isin(sorted(masked_objs)))
-                .select(F.col("obj").alias("__obj"), F.col("row_idx").alias("__ridx"))
-            )
-            masked_rows = (
-                _rows(from_snap, sorted(masked_objs), with_pos=True)
-                .join(mask, ["__obj", "__ridx"], "left_semi")
-                .drop("__obj", "__ridx")
-            )
+            masked_rows = dvfile.join_mask(
+                _rows(from_snap, masked_objs, with_pos=True),
+                self.store,
+                dvfile.covering(new_dvs, masked_objs),
+                how="left_semi",
+                objects=masked_objs,
+            ).drop("__obj", "__ridx")
             deletes = deletes.unionByName(masked_rows)
 
         return inserts.withColumn("_change_type", F.lit("insert")).unionByName(
@@ -4083,13 +4052,8 @@ actions.DropTable` for why clearing the live set on fold is
                     base = self._read_live(
                         table, snap0, stored, files, with_pos=True, record=True
                     )
-                    hits = base.join(matched_keys, list(keys), "left_semi")
                     out["deleted"] = self._write_dv(
-                        tx,
-                        table,
-                        hits.select(
-                            F.col("__obj").alias("obj"), F.col("__ridx").alias("row_idx")
-                        ),
+                        tx, table, base.join(matched_keys, list(keys), "left_semi")
                     )
             if when_not_matched == "insert":
                 out["inserted"] = self._write_counted(table, unmatched)
@@ -4278,45 +4242,20 @@ actions.DropTable` for why clearing the live set on fold is
         written instead of O(affected files) — the right trade for
         small/selective deletes over huge objects; compaction or a
         later COW delete materializes the mask."""
-        matches = (
-            self._read_live(table, snap, stored, candidates, with_pos=True)
-            .filter(pred)
-            .select(F.col("__obj").alias("obj"), F.col("__ridx").alias("row_idx"))
-        )
-        self._write_dv(tx, table, matches)
+        scan = self._read_live(table, snap, stored, candidates, with_pos=True)
+        self._write_dv(tx, table, scan.filter(pred))
 
     def _write_dv(self, tx: "_Tx", table: str, matches: DataFrame) -> int:
-        """Publish an (obj, row_idx) mask DataFrame as a deletion-vector
-        object + log action. Returns rows masked (0 = no-op).
-
-        The mask is published from the staging area like any other
-        Spark-written object, then its ``obj`` column is read back
-        through the store; an empty mask is deleted again, unlogged."""
-        area = self.store.begin_staging()
-        try:
-            self._write_parquet_staging(matches.coalesce(1), area.uri)
-            staged = area.list_staged()
-            if not staged:
-                return 0
-            dv_name = f"dv_{table}_{uuid.uuid4().hex}.parquet"
-            area.publish(staged[0], dv_name)
-            dv_tbl = self._read_store_parquet(dv_name, columns=["obj"])
-            if dv_tbl.num_rows == 0:
-                self.store.delete(dv_name)
-                return 0
-            objects = sorted(set(dv_tbl["obj"].to_pylist()))
-            tx.actions.append(
-                AddDeletionVector(
-                    table=table,
-                    dv_name=dv_name,
-                    objects=objects,
-                    tx_id=tx.id,
-                    num_deleted=dv_tbl.num_rows,
-                )
-            )
-            return dv_tbl.num_rows
-        finally:
-            area.discard()
+        """Publish the positions of ``matches`` (a ``with_pos`` scan) as
+        a deletion-vector object + log action. Returns rows masked
+        (0 = no-op: an empty mask is never published)."""
+        dv = dvfile.write_mask(
+            self.store, self._write_parquet_staging, table, tx.id, matches
+        )
+        if dv is None:
+            return 0
+        tx.actions.append(dv)
+        return dv.num_deleted
 
     def _arrow_bound(self, pa_type, bound: Any) -> Any:
         """Align a Python datetime bound with an Arrow column's timestamp
@@ -4363,46 +4302,34 @@ actions.DropTable` for why clearing the live set on fold is
 
         # files carry physical names (column mapping)
         column = snap.col_maps.get(table, {}).get(column, column)
-        table_dvs = snap.table_dvs(table)
         # a COW rewrite of ONE object is a row subset of it, so the
         # rewrite stays in the source object's bucket — carry the label
         bucket_of = {o.name: o.bucket_id for o in snap.live_objects(table)}
-        dv_cache: dict[str, set] = {}
-
-        def _masked_rows(obj_name: str) -> set:
-            if obj_name not in dv_cache:
-                masked: set = set()
-                for dv_name in table_dvs.get(obj_name, []):
-                    dv_tbl = self._read_store_parquet(dv_name)
-                    for o, r in zip(dv_tbl["obj"].to_pylist(), dv_tbl["row_idx"].to_pylist()):
-                        if o == obj_name:
-                            masked.add(r)
-                dv_cache[obj_name] = masked
-            return dv_cache[obj_name]
+        names = [_basename_of_uri(p) for p in candidates]
+        # every DV covering a candidate, each read once
+        masked = dvfile.read_positions(
+            self._read_store_parquet,
+            dvfile.covering(snap.table_dvs(table), names),
+            names,
+        )
 
         staging = self._staging_dir()
         try:
-            for i, path in enumerate(candidates):
-                tbl = self._read_store_parquet(_basename_of_uri(path))
-                obj_name = _basename_of_uri(path)
-                masked = _masked_rows(obj_name)
-                if column not in tbl.schema.names:
+            for i, obj_name in enumerate(names):
+                raw = self._read_store_parquet(obj_name)
+                if column not in raw.schema.names:
                     # pre-schema-evolution object: the column reads as
                     # all-NULL, NULLs never match a range -> untouched
                     continue
+                tbl = dvfile.apply_mask(raw, masked.get(obj_name))
                 col = tbl[column]
                 lo_b = self._arrow_bound(col.type, start)
                 hi_b = self._arrow_bound(col.type, end)
                 matched = pc.and_kleene(
                     pc.greater_equal(col, lo_b), pc.less_equal(col, hi_b)
                 )
-                keep_list = pc.fill_null(pc.invert(matched), True).to_pylist()
-                if masked:
-                    keep_list = [
-                        k and (j not in masked) for j, k in enumerate(keep_list)
-                    ]
-                survivors = tbl.filter(keep_list)
-                if len(survivors) == len(tbl):
+                survivors = tbl.filter(pc.fill_null(pc.invert(matched), True))
+                if len(survivors) == raw.num_rows:
                     continue  # untouched file stays as-is
                 if len(survivors):
                     tmp = os.path.join(staging, f"rw_{i}.parquet")
@@ -4413,9 +4340,7 @@ actions.DropTable` for why clearing the live set on fold is
                         rewrite=True,
                     )
                 tx.actions.append(
-                    RemoveDataObject(
-                        name=_basename_of_uri(path), table=table, tx_id=tx.id
-                    )
+                    RemoveDataObject(name=obj_name, table=table, tx_id=tx.id)
                 )
         finally:
             _rmtree(staging)
@@ -4758,18 +4683,15 @@ actions.DropTable` for why clearing the live set on fold is
         dv_map = snap.table_dvs(table)
         if not dv_map:
             return 0
-        import collections
-
-        counts: collections.Counter = collections.Counter()
-        for dv in sorted({d for dvl in dv_map.values() for d in dvl}):
-            t = self._read_store_parquet(dv, columns=["obj"])
-            counts.update(t["obj"].to_pylist())
+        masked = dvfile.read_positions(
+            self._read_store_parquet, dvfile.covering(dv_map, dv_map)
+        )
         heavy = [
             o.name
             for o in snap.live_objects(table)
-            if o.name in counts
+            if o.name in masked
             and o.num_rows
-            and counts[o.name] / o.num_rows >= min_masked_fraction
+            and len(masked[o.name]) / o.num_rows >= min_masked_fraction
         ]
         if not heavy:
             return 0
@@ -4874,7 +4796,7 @@ actions.DropTable` for why clearing the live set on fold is
         cutoff = now - min_age_seconds
         deleted = 0
         report: list[dict] = []
-        for prefix in ("table_", "dv_", "bloomf_"):
+        for prefix in ("table_", dvfile.DV_PREFIX, "bloomf_"):
             for name in self.store.list_prefix_ordered(prefix):
                 if name in keep:
                     continue
@@ -4996,96 +4918,15 @@ actions.DropTable` for why clearing the live set on fold is
         # checkpoints published after the listing above are newer than
         # the horizon: the listing covers everything this cut reclaims
         report = reclaim_log(self.store, versions, ckpts, horizon, dry_run)
-
-        def result(**extra) -> Union[int, dict]:
-            # a dry run reports what a real run reclaims and counts
-            if dry_run:
-                return {"objects": report, "count": len(report), **extra}
+        # parquet sidecars retire with their checkpoints, sparing every
+        # part a retained checkpoint still references
+        parts, skipped = reclaim_checkpoint_parts(self.store, horizon, dry_run)
+        report.extend(parts)
+        if not dry_run:
             return len(report)
-        # parquet sidecars retire with their checkpoints (version-
-        # prefixed names; also sweeps orphans a crashed checkpointer
-        # left below the horizon) — REFERENCE-AWARE: checkpoint part
-        # REUSE means a retained checkpoint may reference parts minted
-        # by an older (now-reclaimed) checkpoint, so the sweep spares
-        # every part a retained checkpoint's live_ref names. The
-        # retained payloads are footer-sized JSON (the whole point of
-        # sidecars), so this costs one small read per retained
-        # checkpoint. An unreadable retained checkpoint makes the
-        # reference set unknowable: the sweep SKIPS entirely
-        # (conservative — spares more, never reclaims a live part).
-        from delta_lake_experiment_spark.plans.snapshot import (
-            CHECKPOINT_PART_PREFIX,
-        )
-
-        candidates = []
-        for name in self.store.list_prefix_ordered(CHECKPOINT_PART_PREFIX):
-            version = int(name[len(CHECKPOINT_PART_PREFIX):].split("_", 1)[0])
-            if version >= horizon:
-                break  # zero-padded versions: ascending
-            candidates.append((name, version))
-        if not candidates:
-            # steady state at streaming cadence: nothing below the
-            # horizon -> ZERO reference reads (r12 review finding 4)
-            return result()
-        referenced: set[str] = set()
-        pending = {n for n, _ in candidates}
-        retained = [
-            checkpoint_name(v)
-            for v in checkpoint_versions(self.store)
-            if v >= horizon
-        ]
-        from delta_lake_experiment_spark.plans.protocol import (
-            checkpoint_format,
-            max_supported_checkpoint_format,
-        )
-
-        # newest first: a quiet table's reused parts are referenced by
-        # every retained checkpoint, so the FIRST read usually proves
-        # all candidates live and the scan stops — the full walk only
-        # happens when something is genuinely reclaimable
-        for name in reversed(retained):
-            try:
-                d = json.loads(self.store.read(name))
-                fmt = checkpoint_format(d)
-                if fmt > max_supported_checkpoint_format():
-                    # a future-format retained checkpoint may keep its
-                    # part references in a shape this build cannot see:
-                    # an empty/partial reference set here would sweep
-                    # parts that checkpoint still needs (r12 review
-                    # finding 2) — skip the sweep conservatively
-                    raise ValueError(f"unreadable checkpoint format {fmt}")
-                ref = d.get("live_ref", [])
-            except Exception as e:
-                # surface the skip (ADVICE r12): an operator must be
-                # able to distinguish "nothing reclaimable" from
-                # "sweep skipped because a retained checkpoint is
-                # unreadable" — otherwise orphaned parts accumulate
-                # with no visible cause
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "vacuum_log: skipping the checkpoint-part sweep -"
-                    " retained checkpoint %s is unreadable (%s); %d"
-                    " below-horizon part(s) were spared and will be"
-                    " retried next pass",
-                    name, e, len(candidates),
-                )
-                return result(skipped_part_sweep=name)
-            if isinstance(ref, dict):
-                for ps in ref.values():
-                    referenced.update(ps)
-            else:
-                referenced.update(ref)
-            pending -= referenced
-            if not pending:
-                break  # every candidate is referenced: nothing to sweep
-        for name, version in candidates:
-            if name in referenced:
-                continue  # reused by a retained checkpoint: live
-            if not dry_run:
-                self.store.delete(name)
-            report.append({"name": name, "version": version})
-        return result()
+        # a dry run reports what a real run reclaims and counts
+        out = {"objects": report, "count": len(report)}
+        return {**out, "skipped_part_sweep": skipped} if skipped else out
 
     def _require_tx(self) -> _Tx:
         if self.tx is None:
@@ -5421,14 +5262,8 @@ actions.DropTable` for why clearing the live set on fold is
             return self._apply_defaults(snap, table, d, stored)
 
         df = self.spark.read.schema(self._phys_schema(stored, pmap)).parquet(*files)
-        live_names = {_basename_of_uri(p) for p in files}
-        dv_names = sorted(
-            {
-                dv
-                for obj, dv_list in snap.table_dvs(table).items()
-                if obj in live_names
-                for dv in dv_list
-            }
+        dv_names = dvfile.covering(
+            snap.table_dvs(table), [_basename_of_uri(p) for p in files]
         )
         if not dv_names and not with_pos:
             return _logical(df)
@@ -5439,16 +5274,7 @@ actions.DropTable` for why clearing the live set on fold is
             }
         )
         if dv_names:
-            dv_df = (
-                self.spark.read.parquet(*[self.store.path_of(n) for n in dv_names])
-                .select(F.col("obj").alias("__dv_obj"), F.col("row_idx").alias("__dv_ridx"))
-            )
-            df = df.join(
-                F.broadcast(dv_df),
-                (F.col("__obj") == F.col("__dv_obj"))
-                & (F.col("__ridx") == F.col("__dv_ridx")),
-                "left_anti",
-            )
+            df = dvfile.join_mask(df, self.store, dv_names)
         return (
             _logical(df, ("__obj", "__ridx"))
             if with_pos

@@ -287,13 +287,14 @@ class DropTable:
 
 @dataclass
 class AddDeletionVector:
-    """Soft delete: ``dv_name`` is a Parquet object of (obj, row_idx)
-    pairs masking rows of live data objects in ``objects`` — the
-    reference's unchecked roadmap item (README.md:38) and the Delta/
-    Iceberg positional-delete pattern. Scans anti-join the mask; a
-    later COW rewrite or compaction of a masked object materializes
-    the deletion and retires the vector (removing an object drops its
-    DVs on replay)."""
+    """Soft delete: ``dv_name`` is a deletion-vector object masking
+    rows of the live data objects in ``objects`` — the reference's
+    unchecked roadmap item (README.md:38) and the Delta/Iceberg
+    positional-delete pattern. The file's naming and columns, its
+    writer, its Spark and Arrow readers and the mask apply live in
+    ``plans/deletion_vectors.py``. A later COW rewrite or compaction
+    of a masked object materializes the deletion and retires the
+    vector (removing an object drops its DVs on replay)."""
 
     table: str
     dv_name: str

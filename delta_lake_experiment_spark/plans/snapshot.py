@@ -283,6 +283,84 @@ def reclaim_log(
     return out
 
 
+def reclaim_checkpoint_parts(
+    store: ObjectStorage, below: int, dry_run: bool
+) -> tuple[list[dict], Optional[str]]:
+    """``vacuum_log``'s sweep of checkpoint sidecar parts minted below
+    ``below`` (with their checkpoints, or orphaned by a crashed
+    checkpointer): delete — or, with ``dry_run``, only report — every
+    such part no retained checkpoint references. Returns the
+    ``{"name", "version"}`` report and the name of the retained
+    checkpoint that made the sweep skip, if any.
+
+    REFERENCE-AWARE: checkpoint part REUSE means a retained checkpoint
+    may reference parts minted by an older (now-reclaimed) checkpoint,
+    so every part a retained checkpoint's ``live_ref`` names (flat, or
+    by table) is spared. The retained payloads are footer-sized JSON
+    (the whole point of sidecars), so this costs one small read per
+    retained checkpoint. An unreadable or future-format retained
+    checkpoint makes the reference set unknowable: the sweep SKIPS
+    entirely (conservative — spares more, never reclaims a live part)."""
+    candidates = []
+    for name in store.list_prefix_ordered(CHECKPOINT_PART_PREFIX):
+        version = int(name[len(CHECKPOINT_PART_PREFIX):].split("_", 1)[0])
+        if version >= below:
+            break  # zero-padded versions: ascending
+        candidates.append((name, version))
+    if not candidates:
+        # steady state at streaming cadence: nothing below the
+        # horizon -> ZERO reference reads
+        return [], None
+    referenced: set[str] = set()
+    pending = {n for n, _ in candidates}
+    retained = [v for v in checkpoint_versions(store) if v >= below]
+    # newest first: a quiet table's reused parts are referenced by
+    # every retained checkpoint, so the FIRST read usually proves
+    # all candidates live and the scan stops — the full walk only
+    # happens when something is genuinely reclaimable
+    for v in reversed(retained):
+        name = checkpoint_name(v)
+        try:
+            d = json.loads(store.read(name))
+            fmt = checkpoint_format(d)
+            if fmt > max_supported_checkpoint_format():
+                # a future-format retained checkpoint may keep its
+                # part references in a shape this build cannot see:
+                # an empty/partial reference set here would sweep
+                # parts that checkpoint still needs — skip the sweep
+                # conservatively
+                raise ValueError(f"unreadable checkpoint format {fmt}")
+            ref = d.get("live_ref", [])
+        except Exception as e:
+            # surface the skip: an operator must be able to tell
+            # "nothing reclaimable" from "sweep skipped because a
+            # retained checkpoint is unreadable" — otherwise orphaned
+            # parts accumulate with no visible cause
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "vacuum_log: skipping the checkpoint-part sweep -"
+                " retained checkpoint %s is unreadable (%s); %d"
+                " below-horizon part(s) were spared and will be"
+                " retried next pass",
+                name, e, len(candidates),
+            )
+            return [], name
+        for ps in ref.values() if isinstance(ref, dict) else [ref]:
+            referenced.update(ps)
+        pending -= referenced
+        if not pending:
+            break  # every candidate is referenced: nothing to sweep
+    out = []
+    for name, version in candidates:
+        if name in referenced:
+            continue  # reused by a retained checkpoint: live
+        if not dry_run:
+            store.delete(name)
+        out.append({"name": name, "version": version})
+    return out, None
+
+
 def _parts_to_live(store: ObjectStorage, parts: list[str]) -> dict:
     """Read parquet sidecar parts into ``{table: {name: AddDataObject}}``
     (pyarrow only — metadata-only clients stay Spark-free)."""

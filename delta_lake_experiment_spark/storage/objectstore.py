@@ -87,6 +87,11 @@ class StagingArea(ABC):
         """Staged handle -> byte size."""
 
     @abstractmethod
+    def read(self, staged: str) -> bytes:
+        """The bytes of staged file ``staged`` (a check before it is
+        published)."""
+
+    @abstractmethod
     def publish(self, staged: str, dest_name: str) -> None:
         """Expose staged file ``staged`` as store object ``dest_name``."""
 
@@ -392,6 +397,10 @@ class LocalStagingArea(StagingArea):
 
     def staged_sizes(self) -> dict[str, int]:
         return {p: os.path.getsize(p) for p in self.list_staged()}
+
+    def read(self, staged: str) -> bytes:
+        with open(staged, "rb") as f:
+            return f.read()
 
     def publish(self, staged: str, dest_name: str) -> None:
         self.store.put_file_if_absent(dest_name, staged)

@@ -200,8 +200,10 @@ class S3ObjectStorage(ObjectStorage):
             token = resp.get("NextContinuationToken")
 
     def read(self, name: str) -> bytes:
-        resp = self.client.get_object(Bucket=self.bucket, Key=self._key(name))
-        body = resp["Body"]
+        return self._read_key(self._key(name))
+
+    def _read_key(self, key: str) -> bytes:
+        body = self.client.get_object(Bucket=self.bucket, Key=key)["Body"]
         return body.read() if hasattr(body, "read") else bytes(body)
 
     def path_of(self, name: str) -> str:
@@ -281,6 +283,9 @@ class S3RemoteStaging(StagingArea):
         }
         self._sizes_cache = sizes
         return sizes
+
+    def read(self, staged_key: str) -> bytes:
+        return self.store._read_key(staged_key)
 
     def publish(self, staged_key: str, dest_name: str) -> None:
         self.store.client.copy_object(

@@ -86,6 +86,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from delta_lake_experiment_spark.plans import deletion_vectors as dvfile
 from delta_lake_experiment_spark.plans.actions import (
     AddDataObject,
     AddDeletionVector,
@@ -947,23 +948,10 @@ def _read_engine_file(part: EngineFilePartition) -> Iterator[Any]:
     """Read one data object in the table's logical shape: DV-mask rows
     out, then the shared logical projection. Pure pyarrow — runs in
     the Python data source worker on executors."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(part.path)
-    if part.dv_paths:
-        masked: set[int] = set()
-        for p in part.dv_paths:
-            dv = pq.read_table(p, columns=["obj", "row_idx"])
-            objs = dv.column("obj").to_pylist()
-            idxs = dv.column("row_idx").to_pylist()
-            masked.update(i for o, i in zip(objs, idxs) if o == part.obj_name)
-        if masked:
-            import numpy as np
-
-            keep = np.ones(tbl.num_rows, dtype=bool)
-            keep[np.fromiter(masked, dtype=np.int64)] = False  # O(mask), not O(rows)
-            tbl = tbl.filter(pa.array(keep))
+    masked = dvfile.read_positions(pq.read_table, part.dv_paths, [part.obj_name])
+    tbl = dvfile.apply_mask(pq.read_table(part.path), masked.get(part.obj_name))
     out = _shape_logical(tbl, part.columns, part.defaults, part.with_stamps)
     for batch in out.to_batches():
         yield batch
@@ -1012,15 +1000,6 @@ def _read_engine_cdf(part: EngineCdfPartition) -> Iterator[Any]:
         (physical, _arrow_type(typ)) for _, physical, typ in part.columns
     ] + [(_TX_COL, pa.int64()), (_IDX_COL, pa.int64())]
 
-    def _mask_rows(tbl, masked: set):
-        if not masked:
-            return tbl
-        import numpy as np
-
-        keep = np.ones(tbl.num_rows, dtype=bool)
-        keep[np.fromiter(masked, dtype=np.int64)] = False
-        return tbl.filter(pa.array(keep))
-
     def _normalize(tbl):
         cols = []
         for name, typ in wanted:
@@ -1030,27 +1009,22 @@ def _read_engine_cdf(part: EngineCdfPartition) -> Iterator[Any]:
                 cols.append(pa.nulls(tbl.num_rows, type=typ))
         return pa.table(cols, names=[n for n, _ in wanted])
 
-    def _prior_mask(obj_name: str, dv_paths) -> set:
-        masked: set = set()
-        for p in dv_paths:
-            dv = pq.read_table(p, columns=["obj", "row_idx"])
-            for o, i in zip(
-                dv.column("obj").to_pylist(), dv.column("row_idx").to_pylist()
-            ):
-                if o == obj_name:
-                    masked.add(int(i))
-        return masked
-
     def _union(entries):
         # entries: [(path, obj_name, prior-dv paths)] — prior deletion
         # vectors apply BEFORE the anti-join, matching scan_changes'
         # DV-aware read of removed files: a row soft-deleted in an
         # EARLIER commit is not "deleted again" when a later rewrite
         # or compaction retires its file (the rewrite materialized the
-        # mask, so the raw removed file is wider than the live rows)
+        # mask, so the raw removed file is wider than the live rows).
+        # A DV covering several removed files is read once.
+        masked = dvfile.read_positions(
+            pq.read_table,
+            [d for _, _, dvs in entries for d in dvs],
+            [o for _, o, _ in entries],
+        )
         tbls = [
-            _normalize(_mask_rows(pq.read_table(p), _prior_mask(o, dvs)))
-            for p, o, dvs in entries
+            _normalize(dvfile.apply_mask(pq.read_table(p), masked.get(o)))
+            for p, o, _ in entries
         ]
         tbls = [t for t in tbls if t.num_rows]
         if not tbls:
@@ -1096,11 +1070,7 @@ def _read_engine_cdf(part: EngineCdfPartition) -> Iterator[Any]:
     _emit(_anti(removed, added), "delete")
     # newly DV-masked positions of files this commit did NOT remove
     for dv_path, targets in part.dvs:
-        dv = pq.read_table(dv_path, columns=["obj", "row_idx"])
-        by_obj: dict[str, list[int]] = {}
-        for o, i in zip(dv.column("obj").to_pylist(), dv.column("row_idx").to_pylist()):
-            if o in targets:
-                by_obj.setdefault(o, []).append(int(i))
+        by_obj = dvfile.read_positions(pq.read_table, [dv_path], targets)
         for obj, idxs in sorted(by_obj.items()):
             tbl = pq.read_table(targets[obj]).take(sorted(idxs))
             _emit(tbl, "delete")

@@ -2017,6 +2017,7 @@ def engine_drop_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         UnsupportedTableFeatureError,
     )
     from delta_lake_experiment_spark.functions.numeric import exact_sum
+    from delta_lake_experiment_spark.plans.deletion_vectors import DV_PREFIX
     from delta_lake_experiment_spark.plans.snapshot import (
         log_versions,
         replay_log,
@@ -2043,7 +2044,7 @@ def engine_drop_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     c.delete_rows("ev_victim", "event_id", 1, 500, use_dv=True)
     c.commit_tx()  # v2: DV masks now exist
     v_below_drop = replay_log(c.store).version
-    if not c.store.list_prefix_ordered("dv_"):
+    if not c.store.list_prefix_ordered(DV_PREFIX):
         raise RuntimeError("DV delete left no mask objects to reclaim")
 
     c.new_tx()
@@ -2092,7 +2093,7 @@ def engine_drop_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"vacuum left {len(left - keep_names)} dropped-table objects"
         )
-    if c.store.list_prefix_ordered("dv_"):
+    if c.store.list_prefix_ordered(DV_PREFIX):
         raise RuntimeError("vacuum left the dropped table's DV masks")
 
     # recreate via CREATE OR REPLACE (r14): on the MISSING name it is

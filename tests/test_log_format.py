@@ -1,7 +1,8 @@
 """The commit-log record format has one owner: ``plans/snapshot.py``.
 
 - a guard test keeps every other package module off the record naming
-  (``LOG_PREFIX``, ``log_name``, the ``"_log_"`` literal);
+  (``LOG_PREFIX``, ``log_name``, the ``"_log_"`` literal), and every
+  module outside ``plans/`` off the checkpoint payload's ``"live_ref"``;
 - the single in-commit-timestamp bisect (``ts_bisect``) agrees with a
   linear scan for each of its callers' predicates, legacy records
   without a timestamp included, and reads an unreadable record as
@@ -69,6 +70,16 @@ def _format_leaks(path: Path) -> list[str]:
     return leaks
 
 
+def _checkpoint_payload_leaks(path: Path) -> list[str]:
+    """Where ``path`` reads a checkpoint payload's part references: a
+    ``"live_ref"`` string constant."""
+    return [
+        f"literal {node.value!r}"
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Constant) and node.value == "live_ref"
+    ]
+
+
 def test_only_snapshot_module_knows_the_log_record_naming():
     leaks = {
         str(p.relative_to(PACKAGE)): found
@@ -78,6 +89,14 @@ def test_only_snapshot_module_knows_the_log_record_naming():
     assert leaks == {}
     # the guard itself sees the owner's definitions
     assert _format_leaks(OWNER)
+    # the checkpoint payload is parsed in plans/ only
+    payload_leaks = {
+        str(p.relative_to(PACKAGE)): found
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if p.parent != OWNER.parent and (found := _checkpoint_payload_leaks(p))
+    }
+    assert payload_leaks == {}
+    assert _checkpoint_payload_leaks(OWNER)
 
 
 # -- the single ICT bisect ----------------------------------------------------

@@ -129,7 +129,7 @@ class _LocalSyncedStaging:
     """Test double for the S3A leg of remote staging: Spark writes to a
     local dir; list_staged() first absorbs those files into the fake
     bucket under the staging keys (exactly what the executors' S3A
-    writes would have done), then the PRODUCTION list/publish/discard
+    writes would have done), then the PRODUCTION list/read/publish/discard
     code runs against the fake S3 API."""
 
     def __init__(self, store, local_dir):
@@ -154,6 +154,9 @@ class _LocalSyncedStaging:
         # production code path: exercised so the per-object size lane
         # (AddDataObject.size from the S3 listing) is tested end to end
         return self._inner.staged_sizes()
+
+    def read(self, staged_key):
+        return self._inner.read(staged_key)
 
     def publish(self, staged_key, dest_name):
         self._inner.publish(staged_key, dest_name)

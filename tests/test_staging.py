@@ -85,7 +85,7 @@ def test_s3_rewrites_publish_by_server_side_copy(spark, tmp_path):
 
 def test_empty_dv_mask_leaves_no_object(spark, store_dir):
     """A DV delete whose stat-pruned candidate holds no matching row
-    publishes the empty mask from the staging area, then deletes it:
+    reads the staged mask, finds it empty and never publishes it:
     nothing is logged and no ``dv_`` object or staging directory stays."""
     c = DeltaLakeClient(spark, store_dir)
     c.new_tx()
